@@ -3,16 +3,29 @@ testdata generations (int64 epoch-ns in round 1-2, parquet
 timestamp[us] in round 3) and broke 14 graded queries; these tests
 pin normalize_events_ts to produce identical values for EVERY format
 a generator has shipped, so the next regeneration cannot break the
-loader silently."""
+loader silently.
+
+The second half pins the keying of fixture-derived caches
+(``fixture_cache_dir``): one key per fixture file identity, rooted
+wherever ``tempfile.gettempdir()`` points at call time."""
 
 from __future__ import annotations
 
 import datetime
+import os
+import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from zmaxion_spark.catalog import load_table, normalize_events_ts
+from zmaxion_spark.catalog import (
+    fixture_cache_dir,
+    fixture_stamp,
+    load_table,
+    normalize_events_ts,
+    table_path,
+)
 from tests.conftest import SF_SMOKE
 
 _UTC = datetime.timezone.utc
@@ -67,3 +80,106 @@ def test_events_loader_matches_duckdb_timestamps(spark):
     ).fetchone()
     assert got_all["mn"] == want_all[0]
     assert got_all["mx"] == want_all[1]
+
+
+# ---------------------------------------------------------------------------
+# Fixture-derived cache keying (catalog.fixture_cache_dir)
+# ---------------------------------------------------------------------------
+
+_MTIME_NS = 1_700_000_000 * 1_000_000_000
+
+
+def _fixture(root, name="orders", payload=b"PAR1"):
+    """A stand-in fixture file with a pinned whole-second mtime."""
+    sf = root / "sf"
+    sf.mkdir(exist_ok=True)
+    path = sf / f"{name}.parquet"
+    path.write_bytes(payload)
+    os.utime(path, ns=(_MTIME_NS, _MTIME_NS))
+    return sf, path
+
+
+@pytest.fixture
+def cache_tmp(tmp_path, monkeypatch):
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    return tmp
+
+
+def test_cache_dir_same_for_relative_and_absolute_sf_dir(
+    tmp_path, cache_tmp, monkeypatch
+):
+    sf, _ = _fixture(tmp_path)
+    monkeypatch.chdir(tmp_path)
+    assert fixture_cache_dir("sf", "orders", "t") == fixture_cache_dir(
+        str(sf), "orders", "t"
+    )
+    assert fixture_cache_dir("./sf", "orders", "t") == fixture_cache_dir(
+        str(sf), "orders", "t"
+    )
+
+
+def test_cache_dir_changes_with_size(tmp_path, cache_tmp):
+    sf, path = _fixture(tmp_path)
+    before = fixture_cache_dir(str(sf), "orders", "t")
+    path.write_bytes(b"PAR1PAR1")
+    os.utime(path, ns=(_MTIME_NS, _MTIME_NS))
+    assert fixture_cache_dir(str(sf), "orders", "t") != before
+
+
+def test_cache_dir_changes_with_sub_second_mtime(tmp_path, cache_tmp):
+    sf, path = _fixture(tmp_path)
+    before = fixture_cache_dir(str(sf), "orders", "t")
+    # Same size, same whole second: only the ns mtime moves.
+    os.utime(path, ns=(_MTIME_NS, _MTIME_NS + 1000))
+    assert os.stat(path).st_mtime_ns == _MTIME_NS + 1000
+    assert fixture_cache_dir(str(sf), "orders", "t") != before
+
+
+def test_cache_dir_separates_versions_tables_and_tags(tmp_path, cache_tmp):
+    sf, _ = _fixture(tmp_path)
+    _fixture(tmp_path, "events")
+    dirs = {
+        fixture_cache_dir(str(sf), "orders", "t"),
+        fixture_cache_dir(str(sf), "orders", "t", version="f2"),
+        fixture_cache_dir(str(sf), "orders", "t", version="f3"),
+        fixture_cache_dir(str(sf), "events", "t"),
+        fixture_cache_dir(str(sf), "orders", "u"),
+    }
+    assert len(dirs) == 5
+
+
+def test_cache_dir_is_stable_and_not_created(tmp_path, cache_tmp):
+    sf, _ = _fixture(tmp_path)
+    d = fixture_cache_dir(str(sf), "orders", "t")
+    assert d == fixture_cache_dir(str(sf), "orders", "t")
+    assert os.path.basename(d) == "t"
+    assert not os.path.exists(d)
+
+
+def test_cache_dir_missing_fixture_keys_on_path(tmp_path, cache_tmp):
+    missing = str(tmp_path / "nowhere")
+    assert fixture_stamp(missing, "orders") == os.path.abspath(
+        table_path(missing, "orders")
+    )
+    assert fixture_cache_dir(missing, "orders", "t") != fixture_cache_dir(
+        missing, "events", "t"
+    )
+
+
+def test_cache_root_follows_tempfile_gettempdir(tmp_path, monkeypatch):
+    sf, _ = _fixture(tmp_path)
+    a, b = tmp_path / "a", tmp_path / "b"
+    a.mkdir()
+    b.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(a))
+    assert fixture_cache_dir(str(sf), "orders", "t").startswith(
+        os.path.join(str(a), "zmx-cache") + os.sep
+    )
+    # TMPDIR set after import (perfbench's per-run isolation) is honoured.
+    monkeypatch.setattr(tempfile, "tempdir", None)
+    monkeypatch.setenv("TMPDIR", str(b))
+    assert fixture_cache_dir(str(sf), "orders", "t").startswith(
+        os.path.join(str(b), "zmx-cache") + os.sep
+    )

@@ -318,10 +318,11 @@ def test_shard_manifest_partial_agg(spark):
 def test_orc_scan_pushes_filters(spark):
     """#133: the ORC reader must carry the same pushdown machinery as
     parquet — a filter on a scanned column reaches PushedFilters."""
-    from zmaxion_spark.queries.sources_q import LINEITEM_LITE_SCHEMA, _roundtrip_dir
+    from zmaxion_spark.catalog import fixture_cache_dir
+    from zmaxion_spark.queries.sources_q import LINEITEM_LITE_SCHEMA
 
     REGISTRY["q_scan_orc"].fn(spark, SF_SMOKE)  # materializes the ORC dir
-    path = _roundtrip_dir(SF_SMOKE, "lineitem_orc", "lineitem")
+    path = fixture_cache_dir(SF_SMOKE, "lineitem", "lineitem_orc")
     df = (
         spark.read.schema(LINEITEM_LITE_SCHEMA)
         .orc(path)

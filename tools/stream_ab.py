@@ -6,17 +6,19 @@ Levers that CANNOT change results (same topology, same watermark, same
 emitted rows): state-store provider (HDFS-backed vs RocksDB), the
 ZMX_STREAM_SHUFFLE state partition count, and RocksDB changelog
 checkpointing. Alternates all configs within each cycle so host drift
-cancels; verifies the final result rows are identical across configs.
+cancels (each run timed by ``bench.run_one``), then builds the query
+once more per config, untimed, and verifies the result rows are
+identical across configs.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import run_one  # noqa: E402
 from zmaxion_spark.queries import REGISTRY  # noqa: E402
 from zmaxion_spark.session import get_spark  # noqa: E402
 
@@ -45,13 +47,11 @@ CONFIGS = (
 )
 
 
-def run_one(spark, name: str):
-    t0 = time.time()
-    df = REGISTRY[name].fn(spark, SF_DIR)
-    df.write.format("noop").mode("overwrite").save()
-    dt = time.time() - t0
-    rows = sorted(map(tuple, df.collect()))
-    return dt, rows
+def apply(spark, provider: str, shuffle_n: str, chlog: str | None) -> None:
+    spark.conf.set(PROVIDER_KEY, provider)
+    os.environ["ZMX_STREAM_SHUFFLE"] = shuffle_n
+    if chlog is not None:
+        spark.conf.set(CHANGELOG_KEY, chlog)
 
 
 def main() -> None:
@@ -60,29 +60,32 @@ def main() -> None:
         sys.exit(2)
     name = sys.argv[1]
     cycles = int(sys.argv[2]) if len(sys.argv) > 2 else 3
+    q = REGISTRY[name]
     spark = get_spark("stream-ab")
-    base_rows = None
+    caller_provider = spark.conf.get(PROVIDER_KEY, HDFS)
+    caller_shuffle = os.environ.get("ZMX_STREAM_SHUFFLE")
+    run_one(spark, q, SF_DIR)  # warm-up with the caller's settings, untimed
     times: dict[str, list[float]] = {k: [] for k, *_ in CONFIGS}
-    # warm-up with the current default, untimed
-    os.environ["ZMX_STREAM_SHUFFLE"] = "8"
-    run_one(spark, name)
     for c in range(cycles):
-        for tag, provider, shuffle_n, chlog in CONFIGS:
-            spark.conf.set(PROVIDER_KEY, provider)
-            os.environ["ZMX_STREAM_SHUFFLE"] = shuffle_n
-            if chlog is not None:
-                spark.conf.set(CHANGELOG_KEY, chlog)
+        for tag, *cfg in CONFIGS:
+            apply(spark, *cfg)
             spark.sparkContext.setJobDescription(f"{name} {tag} #{c}")
-            dt, rows = run_one(spark, name)
-            times[tag].append(dt)
-            if base_rows is None:
-                base_rows = rows
-            elif rows != base_rows:
-                print(f"RESULT MISMATCH under {tag}!", file=sys.stderr)
-                sys.exit(1)
-            print(f"cycle {c} {tag}: {dt:.2f}s", flush=True)
-    spark.conf.set(PROVIDER_KEY, HDFS)
-    os.environ["ZMX_STREAM_SHUFFLE"] = "8"
+            times[tag].append(run_one(spark, q, SF_DIR))
+            print(f"cycle {c} {tag}: {times[tag][-1]:.2f}s", flush=True)
+    rows = {}
+    for tag, *cfg in CONFIGS:
+        apply(spark, *cfg)
+        rows[tag] = sorted(map(tuple, q.fn(spark, SF_DIR).collect()))
+    spark.conf.set(PROVIDER_KEY, caller_provider)
+    if caller_shuffle is None:
+        os.environ.pop("ZMX_STREAM_SHUFFLE", None)
+    else:
+        os.environ["ZMX_STREAM_SHUFFLE"] = caller_shuffle
+    base_tag, base_rows = next(iter(rows.items()))
+    bad = [tag for tag, r in rows.items() if r != base_rows]
+    if bad:
+        print(f"RESULT MISMATCH vs {base_tag} under {bad}!", file=sys.stderr)
+        sys.exit(1)
     print(f"== {name} (rows identical across configs: {len(base_rows)}) ==")
     for tag, *_ in CONFIGS:
         ts = times[tag]

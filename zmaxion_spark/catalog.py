@@ -7,9 +7,23 @@ native parquet timestamp (current data: timestamp[us]) or an int64
 of epoch-nanoseconds (older data). We normalize both to a µs
 TIMESTAMP_NTZ — identical to DuckDB's view of the same file, so
 oracle SQL pairs stay bit-exact (verified in tests).
+
+This module is the single owner of the fixture layout and of the
+caches derived from fixtures:
+
+- ``table_path`` is the only place that spells where a table lives.
+- ``fixture_cache_dir`` is the only place that keys a derived cache
+  (stream symlink dirs, format round-trips, logged txlog tables).
+  Caches live under ``$TMPDIR/zmx-cache`` (``tempfile.gettempdir()``,
+  read at call time), keyed by the source file's identity, so a
+  regenerated fixture is never served a stale copy.
 """
 
 from __future__ import annotations
+
+import hashlib
+import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,10 +66,41 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    """Where fixture table ``name`` lives: a parquet file, or (for
+    Spark-written scale-ups, tools/make_sfn.py) a directory of part
+    files under the same name."""
+    return f"{sf_dir}/{name}.parquet"
+
+
+def fixture_stamp(sf_dir: str, table: str) -> str:
+    """Identity of a fixture file: absolute path + size + ns mtime.
+    Relative and absolute spellings of one fixture share a stamp; a
+    regenerated fixture gets a new one. A missing file stamps as its
+    path alone."""
+    src = os.path.abspath(table_path(sf_dir, table))
+    try:
+        st = os.stat(src)
+    except OSError:
+        return src
+    return f"{src}|{st.st_size}|{st.st_mtime_ns}"
+
+
+def fixture_cache_dir(sf_dir: str, table: str, tag: str, version: str = "") -> str:
+    """Cache dir for data derived from fixture ``table``, named ``tag``.
+    ``version`` is the derivation's format generation: bumping it
+    orphans caches an older derivation wrote. The root is read from
+    ``tempfile.gettempdir()`` on every call, so a caller that points
+    TMPDIR elsewhere gets its own caches. The dir is not created."""
+    ident = f"{fixture_stamp(sf_dir, table)}|{version}"
+    key = hashlib.md5(ident.encode()).hexdigest()[:10]
+    return os.path.join(tempfile.gettempdir(), "zmx-cache", key, tag)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table; normalizes events.ts to µs timestamp."""
     tune(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = spark.read.parquet(table_path(sf_dir, name))
     if name == "events":
         df = normalize_events_ts(df)
     return df

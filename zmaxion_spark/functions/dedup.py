@@ -50,43 +50,6 @@ def minhash_params(n_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_base(shingle_col: Column) -> Column:
-    """One md5 per shingle, folded to a 32-bit int (the expensive hash
-    happens exactly once; the n_hashes signatures derive from it)."""
-    return F.transform(
-        shingle_col,
-        lambda s: F.conv(F.substring(F.md5(s.cast("binary")), 1, 8), 16, 10).cast(
-            "long"
-        ),
-    )
-
-
-def minhash_signature_md5(shingle_col: Column, n_hashes: int) -> list[Column]:
-    """MinHash via universal hashing over a single md5 base hash:
-    sig_j = MIN((a_j · x + b_j) mod p) with x = md5(s)[:8] as int.
-
-    The classic trick: hashing every shingle once and deriving the k
-    minhashes by cheap affine transforms is ~k× cheaper than k salted
-    hashes — the difference between 1 and k full passes over 100 TB of
-    shingles. Coefficients are md5-seeded plan-time constants and the
-    whole pipeline is reproducible in DuckDB (oracle parity: x fits in
-    32 bits, a_j < p, so a_j·x < 2^63 — no overflow on either engine)."""
-    xs = minhash_base(shingle_col)
-
-    def affine(a: int, b: int):
-        # Closure (not a lambda default) — a 2-ary lambda would be
-        # treated as transform's (element, index) form.
-        def f(x: Column) -> Column:
-            return (F.lit(a) * x + F.lit(b)) % F.lit(MINHASH_P)
-
-        return f
-
-    return [
-        F.array_min(F.transform(xs, affine(a, b))).alias(f"h{j}")
-        for j, (a, b) in enumerate(minhash_params(n_hashes))
-    ]
-
-
 def minhash_signature_grouped(
     df: DataFrame, id_col: str, shingle_col: Column, n_hashes: int
 ) -> DataFrame:
@@ -147,10 +110,6 @@ def simhash(tokens: Column, bits: int = 16) -> Column:
         contrib = F.aggregate(tokens, F.lit(0).cast("bigint"), bit_merge(j))
         out = out + F.when(contrib >= 0, F.lit(1 << j)).otherwise(F.lit(0))
     return out
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def simhash_table(df: DataFrame, id_col: str, feature_col: Column, bits: int = 64) -> DataFrame:
@@ -251,46 +210,6 @@ def simhash_chunk_near_pairs(
         .drop("ci", "ck")
         .distinct()
         .withColumn("hamming", hamming.cast("bigint"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
-def simhash_near_pairs(sig_df: DataFrame, id_col: str, max_hamming: int = 3) -> DataFrame:
-    """Candidate blocking for SimHash: split the 64-bit signature into
-    4 × 16-bit chunks; by pigeonhole, any pair within Hamming ≤ 3 shares
-    at least one exact chunk — so candidates come from 4 equi-joins on
-    chunk values, never an n² cross join."""
-    assert max_hamming < 4, (
-        "4-chunk pigeonhole blocking is only complete for Hamming <= 3"
-    )
-    chunk_arr = F.array(
-        *[
-            F.shiftrightunsigned("simhash", 16 * c).bitwiseAND(F.lit(0xFFFF))
-            for c in range(4)
-        ]
-    )
-    # Single posexplode + one self-equi-join on (chunk index, chunk
-    # value) instead of a 4-way union of joins — the upstream signature
-    # pipeline (explode + 64 sign-aggregates) is evaluated once per
-    # side, not once per chunk.
-    chunks = sig_df.select(
-        F.col(id_col).alias("_id"),
-        "simhash",
-        F.posexplode(chunk_arr).alias("ci", "ck"),
-    )
-    a = chunks.select(
-        F.col("_id").alias("id_a"), F.col("simhash").alias("sig_a"), "ci", "ck"
-    )
-    b = chunks.select(
-        F.col("_id").alias("id_b"), F.col("simhash").alias("sig_b"), "ci", "ck"
-    )
-    return (
-        a.join(b, ["ci", "ck"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sig_a", "sig_b")
-        .distinct()
-        .withColumn("hamming", hamming64(F.col("sig_a"), F.col("sig_b")))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )

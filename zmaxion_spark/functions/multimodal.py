@@ -65,12 +65,6 @@ def _try_decode_image(payload: bytes) -> dict | None:
         return None
 
 
-def fake_image_dims(payload: bytes) -> dict:
-    """Deterministic stand-in decode keyed on payload bytes — marked
-    fake; a deployment swaps in _try_decode_image's PIL path."""
-    return {"width": len(payload) % 640, "height": (len(payload) * 7) % 480}
-
-
 def resize_images(df: DataFrame, media_col: str, width: int, height: int) -> DataFrame:
     """Resize plumbing: whole-partition Arrow iterator that rewrites
     bytes + meta. Without PIL the payload passes through and only the

@@ -165,8 +165,11 @@ def blocked_pair_max_cosine(
 
     Shape: the same blocked triangle discipline as
     ``dedup.blocked_cluster_pairs`` (identical md5 block ids, identical
-    (cluster, bi, bj) cells carrying <= block rows per side), but each
-    cell is reduced INSIDE one Arrow kernel: members replicate to their
+    (cluster, bi, bj) cells carrying ``block`` rows per side IN
+    EXPECTATION — md5 is a hash split, not a balanced rank, so a
+    hash-skewed block can exceed the bound; the binomial tail makes a
+    2x overload vanishingly rare for block=64), but each cell is
+    reduced INSIDE one Arrow kernel: members replicate to their
     cells (n_c·B/2 narrow rows per cluster — id, vector, norm), and the
     kernel computes the cell's cosine matrix as 64 rank-1 fold updates,
     emitting <= |cell members| partial rows. The join-based pair stage
@@ -191,6 +194,13 @@ def blocked_pair_max_cosine(
       mode the pair-join formulation ERRORS outright on such a pair
       (DIVIDE_BY_ZERO), so the kernel is strictly more robust there;
       fixture embeddings never contain a 0-norm vector.
+
+    Precondition: the plan upstream of ``df`` must be deterministic or
+    checkpointed. Each member is read twice, once per union side
+    (a-side row cells, b-side column cells), so a non-deterministic
+    upstream (rand(), a non-deterministic UDF, an unpinned sample or
+    limit) could give the two sides different block ids or vectors and
+    silently drop or double-count pairs.
     """
     c, i = cluster_col, id_col
     bsz = df.groupBy(c).agg(F.count(F.lit(1)).alias("_nc")).select(

@@ -26,10 +26,6 @@ def tokenize(col: Column | str) -> Column:
     return F.split(normalize(col), " ")
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokenize(col))
-
-
 # Letter runs | digit runs | punctuation runs — the split pass of a
 # BPE pre-tokenizer (GPT-2-style, simplified to a dialect-portable
 # character-class form; DuckDB twin uses [:space:] for \s).
@@ -139,14 +135,6 @@ def punct_ratio(col: Column | str) -> Column:
     total = F.length(c)
     alnum = F.length(F.regexp_replace(c, "[^a-z0-9]", ""))
     return F.when(total > 0, (total - alnum).cast("double") / total).otherwise(F.lit(0.0))
-
-
-def avg_token_len(tokens: Column) -> Column:
-    n = F.size(tokens)
-    chars = F.aggregate(
-        F.transform(tokens, lambda t: F.length(t).cast("double")), F.lit(0.0), lambda a, x: a + x
-    )
-    return F.when(n > 0, chars / n).otherwise(F.lit(0.0))
 
 
 def quality_score(text_col: Column | str, tokens: Column) -> Column:

@@ -90,11 +90,6 @@ def salted_join(
     return salted_left.join(replicated, [on, "_salt"], how).drop("_salt")
 
 
-def table_partition_count(spark: SparkSession, df: DataFrame) -> int:
-    """Physical partition count of a plan — sizing sanity checks."""
-    return df.rdd.getNumPartitions()
-
-
 def compact(
     spark: SparkSession,
     path: str,

@@ -43,8 +43,8 @@ from zmaxion_spark.queries import (  # noqa: F401,E402
     round12b_q,
     retrieval_q,
     scalar,
-    scale_q,
     sources_q,
+    scale_q,
     sql4_q,
     stats_q,
     streaming_q,

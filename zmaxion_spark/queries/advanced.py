@@ -20,10 +20,6 @@ from zmaxion_spark.queries.helpers import DEC, dsum, sql_dsum
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #17 theta / non-equi join (equi key + range residual)
 # ---------------------------------------------------------------------------
@@ -45,8 +41,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "post-match — never a BNLJ.",
 )
 def q_join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _t(spark, sf_dir, "supplier")
-    c = _t(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    c = load_table(spark, sf_dir, "customer")
     return (
         s.join(c, (s.s_nationkey == c.c_nationkey) & (s.s_acctbal > c.c_acctbal))
         .groupBy(F.col("s_nationkey").alias("nationkey"))
@@ -74,8 +70,12 @@ def q_join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ever used dim×dim; Spark broadcasts the smaller side.",
 )
 def q_join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = _t(spark, sf_dir, "region").select("r_name")
-    seg = _t(spark, sf_dir, "customer").select(F.col("c_mktsegment").alias("seg")).distinct()
+    r = load_table(spark, sf_dir, "region").select("r_name")
+    seg = (
+        load_table(spark, sf_dir, "customer")
+        .select(F.col("c_mktsegment").alias("seg"))
+        .distinct()
+    )
     return r.crossJoin(seg).select(
         "r_name", "seg", F.concat(F.col("r_name"), F.lit("/"), F.col("seg")).alias("cell")
     )
@@ -106,7 +106,7 @@ def q_join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the equivalent MAX-correlated-subquery formulation.",
 )
 def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "user_id",
         F.col("ts").alias("ev_ts"),
@@ -161,7 +161,7 @@ def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     "side shuffles once on the month bucket; windows broadcast.",
 )
 def q_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     windows = (
         li.select(F.date_trunc("month", "l_shipdate").alias("w_start"))
         .distinct()
@@ -197,7 +197,7 @@ def q_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Spark expands to a single Expand+agg — one shuffle for all levels.",
 )
 def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(
@@ -256,7 +256,7 @@ def q_sql_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="CUBE over two dimensions with grouping id.",
 )
 def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.cube("o_orderstatus", "o_orderpriority")
         .agg(
@@ -292,7 +292,7 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cells; sort fixes the order so hashes agree).",
 )
 def q_agg_filtered_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.count(F.when(F.col("l_linestatus") == "F", 1)).alias("n_finished"),
         F.count(F.when(F.col("l_quantity") > 25, 1)).alias("n_bulk"),
@@ -328,7 +328,7 @@ def q_agg_filtered_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     "extra distinct-values job — the scale-correct form).",
 )
 def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     p = (
         li.groupBy("l_returnflag")
         .pivot("l_linestatus", ["F", "O"])
@@ -365,7 +365,7 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the sessionization building block. One shuffle on user_id.",
 )
 def q_win_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return ev.select(
@@ -405,7 +405,7 @@ def q_win_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Decimal-exact running sums keep parity with the oracle.",
 )
 def q_win_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     wo = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     run = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     w3 = wo.rowsBetween(-2, Window.currentRow)
@@ -448,7 +448,7 @@ def q_win_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_exact is row_number()=1 (SURVEY #40 tie-break note).",
 )
 def q_dedup_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return (
         o.withColumn("rn", F.row_number().over(w))
@@ -497,7 +497,7 @@ def q_dedup_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     pcts = F.percentile_approx("l_extendedprice", [0.5, 0.9], 10000)
     approx = li.groupBy("l_returnflag").agg(
         F.approx_count_distinct("l_orderkey", 0.01).alias("approx_orders"),
@@ -580,8 +580,8 @@ def q_agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zmaxion_spark.layout import salted_join
 
-    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    cust = _t(spark, sf_dir, "customer").select(
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
+    cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     joined = salted_join(ev, cust, "user_id", F.col("event_id"), n_salts=8)
@@ -648,7 +648,7 @@ def q_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zmaxion_spark.functions.stats import bucket_rank
 
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     g, buckets = bucket_rank(
         o,
         "o_totalprice",
@@ -702,7 +702,7 @@ def q_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     "both sides so parity is total).",
 )
 def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     wide = li.groupBy("l_returnflag").agg(
         dsum(F.when(F.col("l_linestatus") == "F", F.col("l_quantity")), "qty_f"),
         dsum(F.when(F.col("l_linestatus") == "O", F.col("l_quantity")), "qty_o"),
@@ -748,7 +748,7 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     "make the answer engine-dependent.",
 )
 def q_argmax_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     ord_key = F.concat(
         F.lpad(F.round(F.col("o_totalprice") * 100).cast("bigint").cast("string"), 12, "0"),
         F.lpad(F.col("o_orderkey").cast("string"), 10, "0"),
@@ -807,7 +807,7 @@ def q_argmax_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the tolerance window; no window-sort over the full event table.",
 )
 def q_join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("p_id"),
         F.col("user_id").alias("p_user"),
@@ -869,8 +869,8 @@ def q_join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bit-equal.",
 )
 def q_nested_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
     nested = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy("o_orderkey")
@@ -927,7 +927,7 @@ def q_nested_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_approx_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     # SEPARATE aggregation passes joined on the (3-row) group key:
     # mixing COUNT(DISTINCT) with object aggregates (percentile/HLL)
     # in one Aggregate forces an Expand + SortAggregate plan that

@@ -41,10 +41,6 @@ _CHI2_2_95 = "5.991464547107979"  # chi2(2) 95%
 _CVM_CRIT_05 = "0.461"  # two-sample Cramer-von Mises 5% asymptotic
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #373 mann_whitney — tie-corrected two-sample rank test
 # ---------------------------------------------------------------------------
@@ -108,7 +104,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 )
 def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
         .select((F.col("user_id") % 2).alias("arm"), "x")
@@ -252,7 +248,7 @@ def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),
@@ -414,7 +410,7 @@ _FISHER_CELLS_SQL = """
     bench=False,
 )
 def q_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     cells = d.agg(
         F.sum(
             F.when((F.col("source") == "src1") & (F.col("lang") == "en"), 1)
@@ -540,7 +536,7 @@ _CQ_STOPWORDS = "('the','a','of','and','to','in','is','it')"
     bench=False,
 )
 def q_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
         (F.col("lang") == "en").cast("int").alias("truth"),
@@ -657,7 +653,7 @@ def q_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
         .select((F.col("user_id") % 2).alias("arm"), "x")
@@ -733,7 +729,7 @@ _GRID_SQL = """
 
 def _daily_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zero-completed (event_type, t, x) daily-count grid, t from 0."""
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),

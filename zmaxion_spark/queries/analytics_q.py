@@ -23,10 +23,6 @@ from zmaxion_spark.queries.registry import query
 from zmaxion_spark.streaming.pipeline import Pipeline
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #100 bigram LM vocabulary coverage (perplexity proxy)
 # ---------------------------------------------------------------------------
@@ -72,7 +68,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "O(tokens^2) string work and measured 4.8x slower at sf0.1.",
 )
 def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     bigrams = F.expr(
         "CASE WHEN size(_toks) < 2 THEN array() "
         "ELSE zip_with(slice(_toks, 1, size(_toks) - 1), "
@@ -133,7 +129,7 @@ def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the Spark plan reads the table once.",
 )
 def q_data_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
 
     def prof(col: str, numeric: bool) -> list:
         cnt = F.count(F.lit(1))
@@ -317,7 +313,7 @@ def q_stream_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
     "naive distinct-frame never could.",
 )
 def q_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w_first = Window.partitionBy("event_type", "user_id").orderBy("ts", "event_id")
     w_run = (
         Window.partitionBy("event_type")
@@ -370,9 +366,9 @@ def q_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     "order independence comes from summing decimal-cast values.",
 )
 def q_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    orders = load_table(spark, sf_dir, "orders")
     n = (
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
@@ -436,7 +432,7 @@ def q_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tables shrink monotonically so later joins broadcast.",
 )
 def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     s1 = (
         ev.filter(F.col("event_type") == "click")
         .groupBy("user_id")
@@ -518,7 +514,7 @@ def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     "more shuffle of (doc, bigram).",
 )
 def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir, "documents").select(
+    t = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("toks")
     )
     n = F.size("toks")

@@ -31,10 +31,6 @@ from zmaxion_spark.queries.helpers import DEC
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #145 market_basket — co-occurrence counts + lift
 # ---------------------------------------------------------------------------
@@ -83,7 +79,7 @@ def q_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same checkpointed baskets instead of re-deriving the distinct
     # (guide §2.3/§2.4).
     baskets = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
         .localCheckpoint(eager=True)
@@ -164,7 +160,7 @@ def q_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     "integer operands.",
 )
 def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     uw = ev.select(
         "user_id", F.date_trunc("week", F.col("ts")).alias("week")
     ).distinct()
@@ -239,7 +235,7 @@ _SQL_AB = """
 )
 def q_ab_test_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .select((F.col("user_id") % 2).alias("variant"), "value")
     )
@@ -335,7 +331,7 @@ def skyline_2d(
     "any scale.",
 )
 def q_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     pts = part.select("p_retailprice", "p_size").distinct()
     sky = skyline_2d(pts, "p_retailprice", "p_size")
     return part.join(
@@ -1087,7 +1083,7 @@ _SEQ_LOOKS = 30                # one look per fixture day
     "|variants| x |days| cells.",
 )
 def q_sequential_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         (F.col("user_id") % 2).alias("variant"),
         F.expr("unix_micros(ts) div 86400000000").alias("day_idx"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("conv"),
@@ -1212,7 +1208,7 @@ def q_sequential_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_user_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     days = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .select(
             "user_id",
             F.datediff(
@@ -1308,7 +1304,7 @@ _TP_K = 20
     "the census shuffles path strings once; top-k via rank-prune.",
 )
 def q_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
         "event_type",
@@ -1427,7 +1423,7 @@ _PM_EDGES = (
     "partition until they are counts.",
 )
 def q_conformance_fitness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
         "event_id",
@@ -1533,7 +1529,7 @@ _PC_GAP_US = 1_800_000_000  # 30-minute session gap
     "parallelize.",
 )
 def q_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
@@ -1641,7 +1637,7 @@ _AOC_WIN_US = 86_400_000_000  # 24 h completion window
     "window, no join, no sequence state.",
 )
 def q_anyorder_completion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").filter(
+    e = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin(*_AOC_TYPES)
     ).select(
         "user_id",
@@ -1761,7 +1757,7 @@ def q_anyorder_completion(spark: SparkSession, sf_dir: str) -> DataFrame:
     "constant-size state, map-side combined, no window anywhere.",
 )
 def q_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     dec = F.col("o_totalprice").cast("decimal(38,6)")
     zero = F.lit(0).cast("decimal(38,6)")
     u = (
@@ -2002,7 +1998,7 @@ _AP3_TOPK = 15
 )
 def q_apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
     )
@@ -2111,7 +2107,7 @@ def q_apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
         .select((F.col("user_id") % 2).alias("arm"), "x")
@@ -2219,7 +2215,7 @@ f"against a ±{_TOST_MARGIN_FRAC}-of-pooled-mean margin on per-user "
 )
 def q_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
             F.sum(F.round(F.col("value") * 100).cast("bigint"))
@@ -2340,7 +2336,7 @@ def q_item_cf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # by basket size, and the symmetric directed census materializes
     # only AFTER aggregation — the naive per-order self-join shuffled
     # the full pair stream and hit disk-full at sf100 (6B lineitem).
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     # Eager checkpoint, not lazy cache: the four consumer subtrees
     # (it x2 via ni/nj, half x2 via the union) launch as CONCURRENT
     # stages of one job, and a lazy cache gives no cross-stage dedup

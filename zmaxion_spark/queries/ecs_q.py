@@ -502,9 +502,7 @@ def q_ecs_despawn(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ecs_tick_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from zmaxion_spark.catalog import load_table as _lt
-
-    events = _lt(spark, sf_dir, "events").select("event_id", "user_id", "value")
+    events = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
 
     def fold(df):
         return df.groupBy("user_id").agg(

@@ -17,10 +17,6 @@ from zmaxion_spark.queries.analysis7_q import _sql_lf
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #394 bayesian_ab — exact P(variant beats control) over Beta posteriors
 # ---------------------------------------------------------------------------
@@ -98,7 +94,7 @@ _BAYES_TERM = (
 )
 def q_bayesian_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     conv = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
             F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
@@ -235,7 +231,7 @@ def q_bayesian_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_doubly_robust_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("cnt"),
@@ -478,7 +474,7 @@ def _gmm_oracle() -> str:
 )
 def q_gmm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
     )
@@ -631,7 +627,7 @@ _CHI2_1_95_MH = "3.841458820694124"
 )
 def q_mantel_haenszel(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("cnt"),
@@ -812,7 +808,7 @@ _LN_HALF = "-0.6931471805599453"  # ln(0.5)
 def q_hmm_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),

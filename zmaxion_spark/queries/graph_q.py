@@ -36,10 +36,6 @@ from zmaxion_spark.catalog import load_table
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered co-purchase part pairs (u < v) with support counts.
 
@@ -54,7 +50,7 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     u < v by the sorted basket array.
     """
     return (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
         .select(F.posexplode("ps").alias("i", "u"), F.col("ps"))
@@ -232,10 +228,10 @@ def _pr_oracle() -> str:
     "nation has out-edges here).",
 )
 def q_pagerank_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    supp = load_table(spark, sf_dir, "supplier")
     # Loop invariants are materialized ONCE via eager localCheckpoint
     # (the _sparse_cosupply_edges discipline): without it, every
     # unrolled iteration replays the 4-table star join that derives the
@@ -311,7 +307,7 @@ def _sparse_cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # target derived from defaultParallelism) feeds both aliases via one
     # reused exchange (guide §2.5).
     ps = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s"))
         .distinct()
         .repartition(spark.sparkContext.defaultParallelism, "p")
@@ -475,7 +471,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _sparse_cosupply_edges(spark, sf_dir)
     lab = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .filter(F.col("s_suppkey") % 10 == 0)
         .select(
             F.col("s_suppkey").alias("node"),
@@ -544,10 +540,10 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "super-node suppliers would salt (#84's machinery).",
 )
 def q_graph_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("cust"), "o_orderkey"
     )
-    l = _t(spark, sf_dir, "lineitem").select(
+    l = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o_orderkey"), F.col("l_suppkey").alias("supp")
     )
     edge = o.join(l, "o_orderkey").select("cust", "supp").distinct().localCheckpoint(
@@ -862,7 +858,7 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _copurchase_edges(spark, sf_dir)
-    lbl = _t(spark, sf_dir, "part").select(
+    lbl = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("node"), F.col("p_brand").alias("com")
     )
     le = (

@@ -64,10 +64,6 @@ _POIS1_CDF = (
 )
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _r9(col, alias: str):
     """double -> DECIMAL(38,9) -> double quantization (see stats_q._r9)."""
     return col.cast("decimal(38,9)").cast("double").alias(alias)
@@ -143,7 +139,7 @@ def _r9(col, alias: str):
     "key — no global single-partition sort anywhere.",
 )
 def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.unix_micros("ts").alias("us"),
         F.round(F.col("value") * 100).cast("bigint").alias("cents"),
@@ -311,7 +307,7 @@ def _km_sql_update(assign: str, prev: str, out: str) -> str:
 )
 def q_kmeans_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = (
-        _t(spark, sf_dir, "embeddings")
+        load_table(spark, sf_dir, "embeddings")
         .select(
             "vec_id",
             "label",
@@ -466,7 +462,7 @@ def _pois_case_sql(u: str) -> str:
     "the exchange carries B x |groups| rows regardless of data size.",
 )
 def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
         F.col("o_totalprice").cast("decimal(38,6)").alias("price"),
@@ -619,7 +615,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     "partitioned by series key over |days| rows.",
 )
 def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.expr(f"unix_micros(ts) div {_US_PER_DAY}").alias("day_idx"),
         F.round(F.col("value") * 100).cast("bigint").alias("c"),
@@ -733,7 +729,7 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the category-domain product, independent of row count.",
 )
 def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     # localCheckpoint: three consumers (MI + two marginal entropies)
     # must not re-derive the cells — i.e. re-scan the corpus — per
     # branch; the materialized frame is |lang|x|source| rows.
@@ -857,7 +853,7 @@ _CP_FLOOR = 0.85  # graded finite-sample coverage floor (nominal 0.9)
     "group over the calibration quarter.",
 )
 def q_conformal_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     word = F.conv(
         F.substring(
             F.md5(F.col("o_orderkey").cast("string").cast("binary")), 1, 8
@@ -983,7 +979,7 @@ def q_conformal_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     "materializes a single-partition pass over raw rows.",
 )
 def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     wg = Window.partitionBy("source").orderBy("n_chars", "doc_id")
     n_tot = d.agg(F.count(F.lit(1)).alias("n"))
     ranked = d.crossJoin(F.broadcast(n_tot)).select(
@@ -1074,7 +1070,7 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Scale: the shuffle carries one row per (lang, source) cell.",
 )
 def q_chi2_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     cells = d.groupBy("lang", "source").agg(
         F.count(F.lit(1)).cast("bigint").alias("o")
     ).localCheckpoint(eager=True)
@@ -1208,8 +1204,8 @@ _PSM_CALIPER = 0.05
     "|customers|; identical matches.",
 )
 def q_propensity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     rev = o.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast("decimal(38,6)")).alias("y")
     )
@@ -1418,7 +1414,7 @@ _NEY_TOTAL = 100  # total sample budget across strata
     "is window algebra over those cells.",
 )
 def q_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     xdec = F.col("n_chars").cast("decimal(18,0)")
     s = d.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("nh"),
@@ -1540,8 +1536,8 @@ def q_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "never materializes per-pair state.",
 )
 def q_ipw_att(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     rev = o.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast("decimal(38,6)")).alias("y")
     )
@@ -1670,7 +1666,7 @@ _KAP_RATIO = 5.5   # annotator B: chars-per-token density gate
     "runs on |langs| rows.",
 )
 def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     a = F.when(F.col("n_chars") >= _KAP_CHARS, 1).otherwise(0)
     b = F.when(
         F.col("n_chars") / F.size(F.split("text", " ")) >= _KAP_RATIO, 1
@@ -1769,7 +1765,7 @@ def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     "everything after runs on cells.",
 )
 def q_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     cells = d.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("n"))
     tot = cells.groupBy("source").agg(F.sum("n").cast("bigint").alias("ns"))
     langs = cells.select("lang").distinct()
@@ -1894,7 +1890,7 @@ def q_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     "map-side-combined groupBy to k cells; then k-row algebra.",
 )
 def q_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("g"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c"),
     )
@@ -2020,7 +2016,7 @@ def q_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     span = ev.agg(
         (
             (F.min(F.unix_micros("ts")) + F.max(F.unix_micros("ts")))
@@ -2155,7 +2151,7 @@ _KT_GRID_SQL = """
     bench=False,
 )
 def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),
@@ -2275,7 +2271,7 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),
@@ -2422,7 +2418,7 @@ _ROC_DIM = 64
     bench=False,
 )
 def q_rocchio_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings").select(
+    emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
     )
     train = emb.filter(F.col("vec_id") % 5 != 0)
@@ -2536,7 +2532,7 @@ def q_rocchio_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),
@@ -2683,7 +2679,7 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),
@@ -2833,7 +2829,7 @@ def q_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_levene_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),

@@ -35,10 +35,6 @@ def _sql_cosine(a: str, b: str) -> str:
     )
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #64 normalize, #65 tokenize
 # ---------------------------------------------------------------------------
@@ -58,7 +54,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "fold) applied to deliberately dirtied input so the op is exercised.",
 )
 def q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     dirty = F.concat(F.lit("  "), F.upper("text"), F.lit(" !! "))
     return d.select("doc_id", T.normalize(dirty).alias("norm_text"))
 
@@ -79,7 +75,7 @@ def q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "count and first/last accessors — order-preserving equality intact.",
 )
 def q_text_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     return d.select(
         "doc_id",
@@ -111,7 +107,7 @@ def q_text_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Per-language corpus statistics over documents.",
 )
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return d.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("total_chars"),
@@ -150,7 +146,7 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "into a [0,1] score (the classic pretraining-filter features).",
 )
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     return d.select(
         "doc_id",
@@ -186,7 +182,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     "argmax with alphabetical tie-break ('und' when no hits).",
 )
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     return d.select("doc_id", "lang", T.lang_id(toks).alias("pred_lang"))
 
@@ -211,7 +207,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream — both pure codegen'd expressions, exact in DuckDB.",
 )
 def q_token_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         T.bpe_ish_token_count("text").alias("n_bpe_tokens"),
@@ -241,7 +237,7 @@ def q_token_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "df (vocab-sized) broadcasts back onto tf.",
 )
 def q_tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfq = tok.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
@@ -279,7 +275,7 @@ def q_tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Distinct 3-gram shingles per document (the MinHash input).",
 )
 def q_text_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     sh = T.shingles(toks, 3)
     return (
@@ -311,7 +307,7 @@ def q_text_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     "at 100 TB); oracle groups by the text itself — identical partition.",
 )
 def q_dedup_exact_content(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.groupBy(T.fingerprint("text").alias("_fp"))
         .agg(F.min("doc_id").alias("kept_doc"), F.count(F.lit(1)).alias("n_copies"))
@@ -385,7 +381,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread: the 1-partition fixture scan otherwise runs the whole
     # per-row derivation chain below on one core (guide §2.5; catalog.spread
     # is a no-op when the scan is already parallel).
-    d = spread(_t(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"))
     toks = F.split("text", " ")
     sh = d.filter(F.size(toks) >= 3).select(
         "doc_id", T.shingles(toks, 3).alias("s")
@@ -409,7 +405,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_dedup_minhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spread(_t(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"))
     toks = F.split("text", " ")
     sh = d.filter(F.size(toks) >= 3).select(
         "doc_id", T.shingles(toks, 3).alias("s")
@@ -453,7 +449,7 @@ def q_dedup_minhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     s = d.filter(F.size(toks) >= 3).select(
         "doc_id", "lang", (F.col("n_chars") / 16).cast("bigint").alias("blk"),
@@ -530,7 +526,7 @@ _SIMHASH_SQL = f"""
     bench=False,
 )
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     sig = D.simhash_md5_chunks(
         d.filter(F.size(toks) >= 3), "doc_id", T.shingles(toks, 3)
@@ -602,7 +598,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "with the DuckDB list_reduce twin, fully JVM-side.",
 )
 def q_sim_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     a = e.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
     b = e.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
     return a.join(b, F.col("id_b") == F.col("id_a") + 1).select(
@@ -639,7 +635,7 @@ def q_sim_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "with lsh_signature bucketing to prune the corpus (q_sim_join_lsh).",
 )
 def q_sim_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
@@ -673,7 +669,7 @@ def q_sim_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the 100-TB path instead of a brute-force scan in disguise.",
 )
 def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid_"), "embedding"
     )
@@ -738,7 +734,7 @@ def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_sim_topk_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid_"), "embedding"
     )
@@ -777,7 +773,7 @@ def q_sim_topk_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(q_sim_join_lsh) and keep the same keep/drop rule.",
 )
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     return S.dedup_by_cosine(e, "vec_id", "embedding", 0.4)
 
 
@@ -799,7 +795,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_sim_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     return S.sim_join_exact(e, "vec_id", "embedding", 0.35)
 
 
@@ -839,7 +835,7 @@ def q_sim_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shape, not the production path (q_sim_join_lsh_recall's note)
 )
 def q_sim_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     band = (
         F.when(F.col("cos_sim") >= 0.7, "0.70+")
         .when(F.col("cos_sim") >= 0.5, "0.50-0.70")
@@ -907,7 +903,7 @@ def q_sim_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_sim_topk_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
@@ -973,7 +969,7 @@ def q_sim_topk_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_sim_join_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     ex = (
         S.sim_join_exact(e, "vec_id", "embedding", 0.35)
         .select("id_a", "id_b")
@@ -1026,7 +1022,7 @@ _LEXICON = [("fast", 1.0), ("slow", -1.0), ("merge", 0.5), ("scan", -0.25), ("sp
     "broadcast lexicon → per-doc polarity sum. Docs with no hits score 0.",
 )
 def q_sentiment_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     spark_lex = spark.createDataFrame(_LEXICON, ["word", "pol"])
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
     hits = (
@@ -1066,7 +1062,7 @@ def q_sentiment_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
     "path is q_multimodal_features (mapInPandas).",
 )
 def q_multimodal_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     media = F.struct(
         F.concat(F.lit("mem://"), F.col("source"), F.lit("/"), F.col("doc_id").cast("string")).alias("uri"),
         F.when(F.col("doc_id") % 2 == 0, "image/png").otherwise("audio/wav").alias("mime"),
@@ -1099,7 +1095,7 @@ def q_multimodal_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zmaxion_spark.functions import multimodal as M
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     media = M.media_struct(
         F.concat(F.lit("mem://video/"), F.col("doc_id").cast("string")),
         F.lit("video/mp4"),
@@ -1147,7 +1143,7 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dot product. All window math is a single shuffle on user_id.",
 )
 def q_ts_sim_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     fr = w.rowsBetween(-3, Window.currentRow)
     win = F.collect_list("value").over(fr)
@@ -1196,7 +1192,7 @@ def q_ts_sim_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     "counts in tests/test_properties.py.",
 )
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     counts = (
         d.select(F.explode(F.split("text", " ")).alias("term"))
         .groupBy("term")
@@ -1260,7 +1256,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "combine on the same exchange.",
 )
 def q_quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents").select(
+    d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("toks")
     )
     base = d.select(
@@ -1339,7 +1335,7 @@ def q_quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the corpus is never joined row-to-row.",
 )
 def q_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     c = (
         d.select(F.explode(F.split("text", " ")).alias("term"))
         .groupBy("term")
@@ -1412,7 +1408,7 @@ def q_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "AQE skew handling covers the rest.",
 )
 def q_parse_url(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("https://"), F.col("source"), F.lit(".example.com/"),
         F.col("lang"), F.lit("/doc/"), F.col("doc_id").cast("string"),
@@ -1462,7 +1458,7 @@ def q_parse_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the output scalar-only.",
 )
 def q_embedding_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     flat = e.select(
         "label", F.posexplode("embedding").alias("pos", "val")
     ).select(
@@ -1550,7 +1546,7 @@ def q_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     img = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .filter((F.col("doc_id") % 2 == 0) & (F.length("text") >= 64))
         .select(
             "doc_id", "text", F.expr("length(text) div 64").alias("w")
@@ -1693,7 +1689,7 @@ def _bpe_oracle() -> str:
 )
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     wf = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .select(F.explode(F.split("text", " ")).alias("w"))
         .filter(F.col("w").rlike("^[a-z]+$"))
         .groupBy("w")
@@ -1796,7 +1792,7 @@ def q_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread: the 1-partition fixture scan otherwise runs the whole
     # per-row derivation chain below on one core (guide §2.5; catalog.spread
     # is a no-op when the scan is already parallel).
-    d = spread(_t(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"))
     rp = F.expr(
         "array_join(transform(filter(split(text, ' '), w -> length(w) > 0), "
         "w -> concat('[', array_join(transform(sequence(1, length(w)), "
@@ -1942,7 +1938,7 @@ def _sweep_oracle() -> str:
     "5 x |candidates| rows.",
 )
 def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spread(_t(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"))
     toks = F.split("text", " ")
     sh = d.filter(F.size(toks) >= 3).select("doc_id", T.shingles(toks, 3).alias("s"))
     sig = D.minhash_signature_grouped(sh, "doc_id", F.col("s"), 12).localCheckpoint()
@@ -2058,7 +2054,7 @@ _VC_N = 256  # vocabulary size (top-N tokens by corpus frequency)
 def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select(
         "lang", F.explode(F.split("text", " ")).alias("term")
     ).filter(F.col("term") != "")
@@ -2142,7 +2138,7 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bounded by |alphabet| per doc.",
 )
 def q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     ch = d.select(
         "doc_id", "lang", F.explode(F.split("text", "")).alias("c")
     )
@@ -2241,7 +2237,7 @@ def q_pq_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as ST
 
     e = (
-        _t(spark, sf_dir, "embeddings")
+        load_table(spark, sf_dir, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
         .cache()  # consumed once per training round + encode + queries
     )
@@ -2508,7 +2504,7 @@ _BT_THRESHOLD = 1.05  # accept pairs with margin above this
     bench=False,
 )
 def q_margin_bitext(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     a = e.filter(F.col("vec_id") % 2 == 0).select(
         F.col("vec_id").alias("ida"), F.col("embedding").alias("va")
     )
@@ -2668,7 +2664,7 @@ _RAKE_TOPK = 10
 )
 def q_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .select(
             "doc_id",
             "lang",

@@ -32,10 +32,6 @@ _TWO52 = 4503599627370496  # 2^52 — 13 hex chars of md5 normalize to [0,1)
 _LN24 = "3.1780538303479458"  # ln(4!) — max entropy over order-4 patterns
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #381 permutation_entropy — Bandt-Pompe ordinal complexity per series
 # ---------------------------------------------------------------------------
@@ -140,7 +136,7 @@ def _pe_rank_sql(i: int) -> str:
     bench=False,
 )
 def q_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),
@@ -274,7 +270,7 @@ _GAZ_K = 15
     bench=True,
 )
 def q_gazetteer_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = _t(spark, sf_dir, "documents").select(
+    toks = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.explode(F.split(F.col("text"), " ")).alias("tok")
     )
     df = (
@@ -359,8 +355,8 @@ _LN3 = "1.0986122886681098"  # ln(3) — entropy l-diversity gate at l=3
     bench=False,
 )
 def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     j = c.join(o, o["o_custkey"] == c["c_custkey"]).select(
         "c_nationkey", "c_mktsegment", F.col("o_orderpriority").alias("sv")
     )
@@ -462,8 +458,8 @@ _TCLOSE_T = "0.2"
     bench=False,
 )
 def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     j = (
         c.join(o, o["o_custkey"] == c["c_custkey"])
         .select(
@@ -617,7 +613,7 @@ def q_smote_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql import types as T
 
-    emb = _t(spark, sf_dir, "embeddings").select(
+    emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
     )
     mlab = (
@@ -870,7 +866,7 @@ def q_smote_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql import types as T
 
-    emb = _t(spark, sf_dir, "embeddings").select(
+    emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
     )
     mlab = (
@@ -1147,7 +1143,7 @@ def q_dtw_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),

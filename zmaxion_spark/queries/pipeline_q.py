@@ -24,10 +24,6 @@ from zmaxion_spark.catalog import load_table
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def hash_bucket(col: Column, n_buckets: int) -> Column:
     """Deterministic [0, n_buckets) bucket from an md5 word — the
     engine-portable twin of xxhash64-mod (DuckDB reproduces md5
@@ -63,7 +59,7 @@ _SQL_HASH_WORD = "CAST(('0x' || SUBSTR(MD5(CAST({col} AS VARCHAR)), 1, 8)) AS BI
     "with zero shuffles at any scale.",
 )
 def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     b = hash_bucket(F.col("doc_id"), 100)
     return d.select(
         "doc_id",
@@ -101,7 +97,7 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     "single stream serializes.",
 )
 def q_context_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     n_tok = F.size(F.split("text", " "))
     w = (
         Window.partitionBy("source")
@@ -154,7 +150,7 @@ _NUM_RE = "[0-9]+"
     "row-local, zero shuffles.",
 )
 def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     txt = F.concat(
         F.col("text"),
         F.lit(" contact user"),
@@ -199,7 +195,7 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "top-k-per-group shape as #30/#33.",
 )
 def q_lang_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     h = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 8),
         16,
@@ -244,7 +240,7 @@ _SQL_ABSMAX = f"LIST_AGGREGATE(LIST_TRANSFORM({_SQL_EMB_D}, x -> ABS(x)), 'max')
     "vectors, all codegen'd HOF lambdas, zero shuffles, zero Python.",
 )
 def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     emb_d = F.transform("embedding", lambda x: x.cast("double"))
     scale = F.array_max(F.transform(emb_d, F.abs)) / 127.0
     s = e.select("vec_id", emb_d.alias("_v"), scale.alias("_scale"))
@@ -305,7 +301,7 @@ _SQL_FRAG_FP = "CAST(('0x' || SUBSTR(MD5(frag), 1, 15)) AS BIGINT)"
     "aggregations and one equi-join, never document text in a shuffle.",
 )
 def q_fragment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     # Tokenize once (see q_contamination: an unhoisted split inside the
     # index lambda re-splits the text per fragment position).
     pre = d.select("doc_id", F.split("text", " ").alias("_toks")).filter(
@@ -393,7 +389,7 @@ def q_fragment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "this same plan into the commit protocol.",
 )
 def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     base = o.select(
         "o_orderkey",
         "o_custkey",
@@ -457,10 +453,10 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     "construction.",
 )
 def q_fk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    part = load_table(spark, sf_dir, "part")
 
     def audit(child: DataFrame, ckey: str, parent: DataFrame, pkey: str, fk: str) -> DataFrame:
         j = child.select(ckey).join(
@@ -526,7 +522,9 @@ def q_fk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per side, same plan shape).",
 )
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice", "o_orderstatus")
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_totalprice", "o_orderstatus"
+    )
     mutated = o.filter(F.col("o_orderkey") % 7 != 0).select(
         "o_orderkey",
         F.when(F.col("o_orderkey") % 10 == 0, F.col("o_totalprice") + 1.0)
@@ -609,7 +607,7 @@ _SQL_SHINGLES8 = """
     "per shingle.",
 )
 def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     # Tokenize ONCE into a materialized array column — referencing the
     # split expression inside the per-index lambda would re-split the
     # document per shingle position (O(tokens^2) string work; the
@@ -721,7 +719,7 @@ _CDC_DIV = 16     # boundary when window-hash % DIV == 0 -> ~16-token chunks
 )
 def q_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .select(
             "doc_id", F.posexplode(F.split("text", " ")).alias("pos0", "tok")
         )

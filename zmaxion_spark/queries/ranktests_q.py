@@ -21,10 +21,6 @@ _CHI2_1_95 = "3.841458820694124"
 
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #389 cochran_armitage — trend in proportions across ordered doses
 # ---------------------------------------------------------------------------
@@ -77,8 +73,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     bench=False,
 )
 def q_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_acctbal") >= 0)
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_acctbal") >= 0)
+    o = load_table(spark, sf_dir, "orders")
     j = c.join(o, o["o_custkey"] == c["c_custkey"]).select(
         F.least(
             F.floor(F.col("c_acctbal") / 3000).cast("bigint"), F.lit(3)
@@ -208,7 +204,7 @@ def q_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),
             F.lit("1970-01-01").cast("date"),
@@ -380,7 +376,7 @@ def q_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),
@@ -524,7 +520,7 @@ def q_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
         .select((F.col("user_id") % 2).alias("arm"), "x")
@@ -667,7 +663,7 @@ def q_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),
@@ -810,7 +806,7 @@ def q_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_binseg_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),
@@ -972,7 +968,7 @@ _RANSAC_EPS = "3.0"  # inlier residual threshold (events/day)
     bench=False,
 )
 def q_ransac_line(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),

@@ -18,10 +18,6 @@ from zmaxion_spark.queries.helpers import DEC, davg, dsum, sql_davg, sql_dsum
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #1 scan, #8 project, #9 filter, #23 grouped agg, #34 sort — flagship
 # ---------------------------------------------------------------------------
@@ -50,7 +46,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "(partial map-side) keeps the shuffle at |groups| not |rows|.",
 )
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
     return (
@@ -98,9 +94,11 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q03_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = F.lit("1998-03-15").cast("timestamp")
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
+    cust = load_table(spark, sf_dir, "customer").filter(
+        F.col("c_mktsegment") == "BUILDING"
+    )
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -135,15 +133,15 @@ def q03_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffles, on the join key.",
 )
 def q05_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
-    supplier = _t(spark, sf_dir, "supplier")
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    nation = load_table(spark, sf_dir, "nation")
+    supplier = load_table(spark, sf_dir, "supplier")
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(customer, orders.o_custkey == customer.c_custkey)
@@ -187,7 +185,7 @@ def q05_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Catalyst-pushable into the parquet scan.",
 )
 def q_filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.filter(
             F.col("o_orderstatus").isin("F", "O")
@@ -229,8 +227,8 @@ def q_filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     "joins. Scale: semi/anti joins shuffle only keys, never payload rows.",
 )
 def q_exists_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").select("o_custkey")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").select("o_custkey")
     has = (
         c.join(o, c.c_custkey == o.o_custkey, "left_semi")
         .select("c_custkey", F.lit("has_order").alias("tag"))
@@ -262,8 +260,8 @@ def q_exists_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     "nullable side. Scale: shuffle on c_custkey only; agg is partial+final.",
 )
 def q_join_outer_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey", "c_mktsegment")
@@ -299,7 +297,7 @@ def q_join_outer_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rank filter applied before any downstream exchange.",
 )
 def q_win_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), "o_orderkey")
     w2 = Window.partitionBy("o_custkey").orderBy("o_orderstatus")
     return (
@@ -335,7 +333,7 @@ def q_win_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     "count-distinct expands to a two-level agg; partials keep it bounded.",
 )
 def q_agg_global_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("l_suppkey").alias("n_supp"),
@@ -369,9 +367,13 @@ def q_agg_global_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     "plan as hash aggregates/joins on the key — one shuffle each.",
 )
 def q_set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    buyers = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k")).distinct()
+    buyers = (
+        load_table(spark, sf_dir, "orders")
+        .select(F.col("o_custkey").alias("k"))
+        .distinct()
+    )
     rich = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") > 5000)
         .select(F.col("c_custkey").alias("k"))
     )
@@ -400,7 +402,7 @@ def q_set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle of the full table.",
 )
 def q_sort_limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.select("o_orderkey", "o_totalprice", "o_orderdate")
         .orderBy(F.col("o_totalprice").desc(), "o_orderkey")
@@ -431,7 +433,7 @@ def q_sort_limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "over one exchange of one row per partition).",
 )
 def q06_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= "1996-01-01")
@@ -466,10 +468,10 @@ def q06_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "filtered sum, exact through decimal on both engines.",
 )
 def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-09-01") & (F.col("l_shipdate") < "1996-10-01")
     )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     net = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(DEC)
     return (
         li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
@@ -511,8 +513,8 @@ def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bounds) are pushed to their scans as derived filters.",
 )
 def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
     clause = (
         (F.col("p_brand") == "Brand#1")
@@ -576,9 +578,9 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "decorrelation a 100 TB plan needs.",
 )
 def q21_blocking_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    supplier = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    supplier = load_table(spark, sf_dir, "supplier")
     # Pass 1: per-(order, supplier) max ship date.
     per_supp = li.groupBy(
         F.col("l_orderkey").alias("ps_orderkey"),

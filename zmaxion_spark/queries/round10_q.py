@@ -31,10 +31,6 @@ from zmaxion_spark.catalog import load_table
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #420 scale contract — SemDeDup with k grown 8x on 4x jittered points
 # ---------------------------------------------------------------------------
@@ -201,7 +197,7 @@ def _sdb_oracle() -> str:
 def q_semdedup_big(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zmaxion_spark.functions import similarity as S
 
-    emb = _t(spark, sf_dir, "embeddings").select(
+    emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v0")
     )
     reps = F.explode(F.sequence(F.lit(0), F.lit(_SDB_REPL - 1))).alias("i")

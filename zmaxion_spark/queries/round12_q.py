@@ -49,10 +49,6 @@ from zmaxion_spark.catalog import load_table
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _q12(col):
     """Shared-IEEE 1e-12 quantization grid for libm terms."""
     return F.floor(col * 1e12 + 0.5) / 1e12
@@ -79,7 +75,7 @@ _DAILY_SQL = """
 
 def _daily_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .groupBy(F.to_date(F.date_trunc("day", F.col("o_orderdate"))).alias("d"))
         .agg(
             F.sum(F.floor(F.col("o_totalprice") + 0.5).cast("bigint"))
@@ -144,11 +140,11 @@ def _daily_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
     "runs on the already-filtered EUROPE slice.",
 )
 def q02_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     ps = li.groupBy(
         F.col("l_partkey").alias("partkey"), F.col("l_suppkey").alias("suppkey")
     ).agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("cost"))
@@ -240,10 +236,10 @@ def q02_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcast dim filter; the global total is a 1-row broadcast.",
 )
 def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    li = load_table(spark, sf_dir, "lineitem")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     eur_supp = (
         supp.join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
         .join(
@@ -1059,7 +1055,7 @@ def q_pettitt_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     cents = F.floor(F.col("c_acctbal") * 100 + 0.5).cast("bigint")
     cells = cust.groupBy(F.col("c_nationkey").alias("g")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_i"),
@@ -1182,9 +1178,9 @@ def q_bartlett_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_atkinson_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
     cells = (
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
@@ -1312,8 +1308,8 @@ def q_atkinson_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
-    li = _t(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
     pc = part.select(
         "p_partkey",
         F.floor(F.col("p_retailprice") / 10).cast("bigint").alias("bin"),

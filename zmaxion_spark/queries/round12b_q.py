@@ -32,8 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from zmaxion_spark.catalog import load_table
 from zmaxion_spark.queries.registry import query
-from zmaxion_spark.queries.round12_q import _DAILY_SQL, _daily_idx, _t
+from zmaxion_spark.queries.round12_q import _DAILY_SQL, _daily_idx
 
 # Shared: the daily-revenue OLS fit + whole-dollar residuals, exactly
 # as q_durbin_watson / q_breusch_pagan construct them.
@@ -621,8 +622,8 @@ def q_ramsey_reset(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
     pairs = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select(

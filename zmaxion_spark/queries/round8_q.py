@@ -33,10 +33,6 @@ from zmaxion_spark.catalog import load_table
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #402 bradley_terry — pairwise-preference strength via 4 MM rounds
 # ---------------------------------------------------------------------------
@@ -129,7 +125,7 @@ def _bt_round_sql(prev: str, out: str) -> str:
     bench=True,
 )
 def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     base = o.groupBy(
         F.col("o_custkey").alias("ck"), F.col("o_orderpriority").alias("m")
     ).agg(
@@ -316,7 +312,7 @@ def q_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_qini_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
             F.least(
@@ -501,7 +497,7 @@ def q_qini_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev0 = _t(spark, sf_dir, "events")
+    ev0 = load_table(spark, sf_dir, "events")
     gmax = ev0.groupBy().agg(F.max("ts").alias("gmax"))
     span = (
         ev0.groupBy("user_id")
@@ -666,7 +662,7 @@ def q_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
         .select((F.col("user_id") % 2).cast("int").alias("arm"), "x")
@@ -843,7 +839,7 @@ _HURST_SIZES = (5, 10, 15)  # the events fixture spans 30 days at every SF
     bench=False,
 )
 def q_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),
@@ -1069,7 +1065,7 @@ _HEAPS_CHK = 20  # ~checkpoints per language
     bench=False,
 )
 def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = _t(spark, sf_dir, "documents").select(
+    toks = load_table(spark, sf_dir, "documents").select(
         "lang",
         "doc_id",
         F.explode(
@@ -1275,7 +1271,7 @@ def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zmaxion_spark.queries.inference_q import _KM_K, _KM_ITERS
 
     emb = (
-        _t(spark, sf_dir, "embeddings")
+        load_table(spark, sf_dir, "embeddings")
         .select(
             "vec_id",
             "label",
@@ -1459,7 +1455,7 @@ _DBS_SAMPLE = 4096  # md5-ranked sample cap: density clustering at 100 TB
     bench=True,
 )
 def q_dbscan_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     word = F.conv(
         F.substring(
             F.md5(F.concat(F.lit("dbs:"), F.col("vec_id").cast("string"))),
@@ -1648,7 +1644,7 @@ _SHAP_MIN_WORDS = 40
     bench=False,
 )
 def q_shapley_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     flags = d.select(
         (F.col("n_chars") >= _SHAP_MIN_CHARS).cast("bigint").alias("fa"),
         (
@@ -1791,7 +1787,7 @@ def q_token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for t in (1, 2, 3)
     ]
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     rp = F.expr(
         "array_join(transform(filter(split(text, ' '), w -> length(w) > 0), "
         "w -> concat('[', array_join(transform(sequence(1, length(w)), "
@@ -1909,7 +1905,7 @@ _MIX_ALPHAS = ("1.0", "0.7", "0.5", "0.3")
     bench=False,
 )
 def q_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     src = d.groupBy("source").agg(
         F.sum(
             F.size(F.filter(F.split("text", " "), lambda w: F.length(w) > 0))

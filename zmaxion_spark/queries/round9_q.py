@@ -42,10 +42,6 @@ from zmaxion_spark.queries.registry import query
 from zmaxion_spark.queries.round8_q import _DBS_EPS, _DBS_MINPTS
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #413 connected_components — bounded-round hash-to-min labels
 # ---------------------------------------------------------------------------
@@ -236,7 +232,7 @@ def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zmaxion_spark.functions import dedup as D
     from zmaxion_spark.functions import text as T
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     sh = d.filter(F.size(toks) >= 3).select(
         "doc_id", T.shingles(toks, 3).alias("s")
@@ -369,7 +365,7 @@ _DSIR_TARGET = "en"
     bench=False,
 )
 def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     bg = d.select(
         "doc_id",
         "source",
@@ -522,7 +518,7 @@ _KN_D = "0.75"
     bench=False,
 )
 def q_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir, "documents").select(
+    t = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.split("text", " ").alias("toks")
     )
     n = F.size("toks")
@@ -671,7 +667,7 @@ def q_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _t(spark, sf_dir, "documents").select(
+    t = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.split("text", " ").alias("toks")
     )
     n = F.size("toks")
@@ -839,7 +835,7 @@ def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_welch_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("g"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("c"),
     )
@@ -980,7 +976,7 @@ def q_welch_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),
@@ -1124,7 +1120,7 @@ _DBJ_REPL = 8
     bench=True,
 )
 def q_dbscan_big(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     reps = F.explode(F.sequence(F.lit(0), F.lit(_DBJ_REPL - 1))).alias("i")
     base = emb.select(
         "vec_id",

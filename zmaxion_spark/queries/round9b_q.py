@@ -35,10 +35,6 @@ from zmaxion_spark.queries.registry import query
 _US_PER_DAY = 86_400_000_000
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #420 semdedup — cluster-bounded embedding near-dup census
 # ---------------------------------------------------------------------------
@@ -158,7 +154,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zmaxion_spark.queries.inference_q import _KM_ITERS, _KM_K
 
     emb = (
-        _t(spark, sf_dir, "embeddings")
+        load_table(spark, sf_dir, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
         .cache()
     )
@@ -326,7 +322,7 @@ def _ql_oracle() -> str:
 def q_ql_dirichlet(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zmaxion_spark.queries.retrieval_q import _BM25_TERMS
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     tok = d.select("doc_id", F.explode(toks).alias("term"))
     dl = d.select("doc_id", F.size(toks).cast("bigint").alias("dl"))
@@ -442,7 +438,7 @@ def q_ql_dirichlet(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
         .select((F.col("user_id") % 2).alias("arm"), "x")
@@ -570,7 +566,7 @@ def _kripp_oracle() -> str:
 def q_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zmaxion_spark.queries.analysis7_q import _CQ_STOPWORDS
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
     stop_set = [
         s.strip() for s in _CQ_STOPWORDS.strip("()").replace("'", "").split(",")
@@ -702,7 +698,7 @@ _YJ_STEPS = 10
 def q_youden_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zmaxion_spark.queries.governance_q import q_quality_classifier
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     scored = (
         q_quality_classifier(spark, sf_dir)
         .join(
@@ -849,7 +845,7 @@ def q_youden_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.expr(f"unix_micros(ts) div {_US_PER_DAY}").alias("day_idx"),
         F.round(F.col("value") * 100).cast("bigint").alias("c"),
@@ -990,7 +986,7 @@ _ADF_CRIT_5 = "-2.86"  # published large-n 5% DF critical value (with const)
     bench=False,
 )
 def q_adf_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         F.expr(f"unix_micros(ts) div {_US_PER_DAY}").alias("d")
     )
     cnt = o.groupBy("d").agg(F.count(F.lit(1)).alias("n"))
@@ -1146,7 +1142,7 @@ _RIDGE_LAMS = (0, 1, 10)  # lambda = lam_k * mean(Sxx)/10
     bench=False,
 )
 def q_ridge_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         F.expr(f"unix_micros(ts) div {_US_PER_DAY}").alias("d")
     )
     cnt = o.groupBy("d").agg(F.count(F.lit(1)).alias("n"))
@@ -1308,7 +1304,7 @@ def q_ridge_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .select(
             F.expr(f"unix_micros(ts) div {_US_PER_DAY}").alias("d"),
             F.round(F.col("value") * 100).cast("bigint").alias("c"),

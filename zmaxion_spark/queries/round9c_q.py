@@ -32,10 +32,6 @@ from zmaxion_spark.catalog import load_table
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #429 graph_backbone — disparity-filter significant edges
 # ---------------------------------------------------------------------------
@@ -253,11 +249,11 @@ _TWO52 = float(1 << 52)
     bench=False,
 )
 def q_kmv_anotb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    a_keys = _t(spark, sf_dir, "orders").select(
+    a_keys = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("k")
     ).distinct()
     b_keys = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") < 0)
         .select(F.col("c_custkey").alias("k"))
         .distinct()
@@ -416,7 +412,7 @@ def _cronbach_oracle() -> str:
 def q_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zmaxion_spark.queries.analysis7_q import _CQ_STOPWORDS
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
     stop_set = [
         s.strip().strip("'")
@@ -636,7 +632,7 @@ def q_eigencentrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_mcc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zmaxion_spark.queries.governance_q import q_quality_classifier
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     scored = (
         q_quality_classifier(spark, sf_dir)
         .join(
@@ -831,7 +827,7 @@ def q_stream_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # exact rank-value anchors from the batch table (same rows the
     # stream replays)
-    evb = _t(spark, sf_dir, "events").filter(F.col("value") > 0)
+    evb = load_table(spark, sf_dir, "events").filter(F.col("value") > 0)
     vcum = (
         evb.groupBy("event_type", F.col("value").alias("v"))
         .count()

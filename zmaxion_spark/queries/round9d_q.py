@@ -30,10 +30,6 @@ from zmaxion_spark.catalog import load_table
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #435 word_dispersion — Gries' deviation of proportions (DP)
 # ---------------------------------------------------------------------------
@@ -97,7 +93,7 @@ _WD_TOP = 20
     bench=False,
 )
 def q_word_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tok = _t(spark, sf_dir, "documents").select(
+    tok = load_table(spark, sf_dir, "documents").select(
         "source", F.explode(F.split("text", " ")).alias("term")
     )
     cells = tok.groupBy("term", "source").agg(
@@ -201,7 +197,7 @@ _TC_TOP = 10
 )
 def q_topic_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
     dt = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .select("doc_id", F.explode(F.split("text", " ")).alias("term"))
         .distinct()
     )
@@ -301,7 +297,7 @@ _QA_BUDGET = 1000
 )
 def q_quota_apportion(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .groupBy("source")
         .agg(
             F.sum(
@@ -427,7 +423,7 @@ def q_aa_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         % 2
     )
     v = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
         .select(arm.alias("arm"), "x")

@@ -28,10 +28,6 @@ from zmaxion_spark.catalog import load_table
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #440 sprt_sequential — Wald SPRT over the user stream
 # ---------------------------------------------------------------------------
@@ -104,7 +100,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 )
 def q_sprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     conv = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg((F.count(F.lit(1)) % 2).cast("bigint").alias("c"))
     )
@@ -243,7 +239,7 @@ def q_bootstrap_diff_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zmaxion_spark.queries.inference_q import _B, _POIS1_CDF
 
     v = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
         .select("user_id", (F.col("user_id") % 2).alias("arm"), "x")
@@ -381,7 +377,7 @@ def q_bootstrap_diff_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_hill_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .groupBy("lang", "source")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )

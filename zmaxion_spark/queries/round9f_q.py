@@ -32,10 +32,6 @@ from zmaxion_spark.catalog import load_table
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #443 hits_scores — HITS hubs/authorities on the nation trade graph
 # ---------------------------------------------------------------------------
@@ -118,10 +114,10 @@ def _hits_oracle() -> str:
     bench=False,
 )
 def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    supp = load_table(spark, sf_dir, "supplier")
     e = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -388,9 +384,9 @@ def q_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_theil_inequality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
     cells = (
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
@@ -574,7 +570,7 @@ def q_theil_inequality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = F.floor(F.col("o_totalprice") + 0.5).cast("bigint")
     lims = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .select(x.alias("x"))
         .select(
             "x",
@@ -736,7 +732,7 @@ def q_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     daily = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .groupBy(F.to_date(F.date_trunc("day", F.col("o_orderdate"))).alias("d"))
         .agg(
             F.sum(F.floor(F.col("o_totalprice") + 0.5).cast("bigint"))
@@ -880,7 +876,7 @@ def q_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_james_stein(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = F.floor(F.col("c_acctbal") * 100 + 0.5).cast("bigint")
     cells = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .select(F.col("c_nationkey").alias("g"), cents.alias("v"))
         .groupBy("g")
         .agg(

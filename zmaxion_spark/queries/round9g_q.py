@@ -32,10 +32,6 @@ from zmaxion_spark.catalog import load_table
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #449 raking_ipf — iterative proportional fitting to uniform margins
 # ---------------------------------------------------------------------------
@@ -113,8 +109,8 @@ def _ipf_oracle() -> str:
     bench=False,
 )
 def q_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
     cells = (
         cust.join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .groupBy(
@@ -236,7 +232,7 @@ def q_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     py = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .groupBy(
             F.col("l_partkey").alias("pk"),
             F.year("l_shipdate").cast("bigint").alias("y"),
@@ -402,7 +398,7 @@ def q_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     daily = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy(F.to_date(F.date_trunc("day", F.col("ts"))).alias("d"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("y"))
     )
@@ -527,7 +523,7 @@ _PI = "3.141592653589793"
 )
 def q_gumbel_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .groupBy(
             (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
             .cast("bigint")
@@ -641,7 +637,7 @@ def q_gumbel_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_slope_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy(F.col("user_id").alias("u"), F.col("event_type").alias("i"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("x"))
         .localCheckpoint()
@@ -762,7 +758,7 @@ def q_slope_one(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_bipartite_ochiai(spark: SparkSession, sf_dir: str) -> DataFrame:
     items = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
         .localCheckpoint()

@@ -30,10 +30,6 @@ from zmaxion_spark.catalog import load_table
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # Shared day-grain revenue census (the #447 base).
 _SQL_DAILY = """
         daily AS (
@@ -50,7 +46,7 @@ _SQL_DAILY = """
 
 def _daily_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .groupBy(F.to_date(F.date_trunc("day", F.col("o_orderdate"))).alias("d"))
         .agg(
             F.sum(F.floor(F.col("o_totalprice") + 0.5).cast("bigint"))
@@ -115,7 +111,7 @@ def _daily_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_yule_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .select("lang", F.explode(F.split("text", " ")).alias("w"))
         .filter(F.length("w") > 0)
         .groupBy("lang", "w")
@@ -937,7 +933,7 @@ _AP_STEPS = 20
 def q_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zmaxion_spark.queries.governance_q import q_quality_classifier
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     scored = (
         q_quality_classifier(spark, sf_dir)
         .join(

@@ -32,10 +32,6 @@ from zmaxion_spark.catalog import load_table
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #463 stream_hll — HyperLogLog registers as streaming state
 # ---------------------------------------------------------------------------
@@ -182,7 +178,7 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.col("e_raw"))
     corrected = est.select("event_type", "used", "v0", e.alias("e"))
     exact = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(F.countDistinct("user_id").cast("bigint").alias("exact_distinct"))
     )
@@ -291,7 +287,7 @@ _BD_TOP = 30
 )
 def q_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .select("source", F.explode(F.split("text", " ")).alias("w"))
         .filter(F.length("w") > 0)
         .groupBy("source", "w")
@@ -419,7 +415,7 @@ def q_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     exp_ = F.col("o_orderpriority") == "1-URGENT"
     out = F.col("o_orderstatus") == "F"
-    cells = _t(spark, sf_dir, "orders").agg(
+    cells = load_table(spark, sf_dir, "orders").agg(
         F.sum(F.when(exp_ & out, 1).otherwise(0)).cast("bigint").alias("a"),
         F.sum(F.when(exp_ & ~out, 1).otherwise(0)).cast("bigint").alias("b"),
         F.sum(F.when(~exp_ & out, 1).otherwise(0)).cast("bigint").alias("c"),
@@ -499,7 +495,7 @@ def q_odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_vocab_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .select("source", F.explode(F.split("text", " ")).alias("w"))
         .filter(F.length("w") > 0)
         .distinct()
@@ -655,7 +651,7 @@ def _gesd_oracle() -> str:
 )
 def q_gesd_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .groupBy(F.to_date(F.date_trunc("day", F.col("o_orderdate"))).alias("d"))
         .agg(
             F.sum(F.floor(F.col("o_totalprice") + 0.5).cast("bigint"))
@@ -816,7 +812,7 @@ _SS_K = 20
     bench=False,
 )
 def q_selection_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs_df = _t(spark, sf_dir, "documents")
+    docs_df = load_table(spark, sf_dir, "documents")
     halves = docs_df.select(
         "doc_id",
         "text",

@@ -33,10 +33,6 @@ from zmaxion_spark.functions.ranks import bucketed_row_number, ntile_from_rn
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #469 newsvendor — critical-fractile stocking with integer cost audit
 # ---------------------------------------------------------------------------
@@ -105,7 +101,7 @@ _NV_CO = 1  # overage cost (holding per excess unit)
 )
 def q_newsvendor(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .groupBy(F.to_date(F.date_trunc("day", F.col("o_orderdate"))).alias("d"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("dem"))
     )
@@ -213,7 +209,7 @@ def q_newsvendor(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_lorenz_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _t(spark, sf_dir, "orders").select(
+    v = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint").alias("cents"),
     )
@@ -318,8 +314,8 @@ def q_lorenz_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_hoover_palma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     cells = (
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy(F.col("c_nationkey").alias("g"))
@@ -456,7 +452,7 @@ _PT_BIN = 500  # dollars per tail bin
     bench=False,
 )
 def q_pareto_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _t(spark, sf_dir, "orders").select(
+    v = load_table(spark, sf_dir, "orders").select(
         F.floor(F.col("o_totalprice") + 0.5).cast("bigint").alias("x")
     )
     census = v.groupBy(F.expr(f"x div {_PT_BIN}").alias("b")).agg(
@@ -567,8 +563,8 @@ def q_pareto_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_variance_explained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     v = orders.join(cust, orders.o_custkey == cust.c_custkey).select(
         F.col("c_nationkey").alias("g"),
         F.floor(F.col("o_totalprice") + 0.5).cast("bigint").alias("x"),
@@ -679,8 +675,8 @@ def q_variance_explained(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_design_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     v = orders.join(cust, orders.o_custkey == cust.c_custkey).select(
         F.col("c_nationkey").alias("g"),
         F.floor(F.col("o_totalprice") + 0.5).cast("bigint").alias("x"),

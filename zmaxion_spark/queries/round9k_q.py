@@ -32,10 +32,6 @@ from zmaxion_spark.catalog import load_table
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #475 alpha_footprint — process-discovery relation matrix
 # ---------------------------------------------------------------------------
@@ -90,7 +86,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     bench=False,
 )
 def q_alpha_footprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ordered = ev.select(
         "event_type", F.lead("event_type").over(w).alias("nxt")
@@ -235,8 +231,8 @@ def _sinkhorn_oracle() -> str:
     bench=False,
 )
 def q_sinkhorn_transport(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
     base = cust.join(
         F.broadcast(nation), cust.c_nationkey == nation.n_nationkey
     ).select(F.col("n_regionkey").alias("r"), F.col("c_mktsegment").alias("seg"))
@@ -370,7 +366,7 @@ _WZ = "1.959964"
 )
 def q_wilson_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     peru = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
             F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
@@ -461,7 +457,7 @@ def q_wilson_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_process_capability(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .groupBy(F.to_date(F.date_trunc("day", F.col("o_orderdate"))).alias("d"))
         .agg(
             F.sum(F.floor(F.col("o_totalprice") + 0.5).cast("bigint"))
@@ -589,7 +585,7 @@ def q_process_capability(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_tukey_hsd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _t(spark, sf_dir, "customer").select(
+    v = load_table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("g"),
         F.floor(F.col("c_acctbal") * 100 + 0.5).cast("bigint").alias("x"),
     )

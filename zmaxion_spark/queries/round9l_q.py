@@ -34,10 +34,6 @@ from zmaxion_spark.catalog import load_table
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #480 energy_distance — exact two-sample energy statistic
 # ---------------------------------------------------------------------------
@@ -125,7 +121,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 )
 def q_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority").isin("1-URGENT", "5-LOW"))
         .select(
             F.floor(F.col("o_totalprice") + 0.5).cast("bigint").alias("x"),
@@ -276,7 +272,7 @@ _MMD_S = "1e10"  # kernel scale: k(x,y) = (1 + xy/s)^2
 )
 def q_mmd_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.year("o_orderdate").isin(1995, 2000))
         .select(
             F.year("o_orderdate").cast("bigint").alias("y"),
@@ -431,7 +427,7 @@ def q_mmd_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_quantile_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .groupBy(F.to_date(F.date_trunc("day", F.col("o_orderdate"))).alias("d"))
         .agg(
             F.sum(F.floor(F.col("o_totalprice") + 0.5).cast("bigint"))
@@ -577,7 +573,7 @@ _RC_K = 50
 )
 def q_rank_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     py = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .groupBy(
             F.year("l_shipdate").cast("bigint").alias("y"),
             F.col("l_partkey").alias("pk"),

@@ -28,10 +28,6 @@ from zmaxion_spark.catalog import load_table
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #484 gini_mean_diff — exact GMD + Gini by the prefix identity
 # ---------------------------------------------------------------------------
@@ -87,7 +83,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     bench=False,
 )
 def q_gini_mean_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _t(spark, sf_dir, "orders").select(
+    v = load_table(spark, sf_dir, "orders").select(
         F.floor(F.col("o_totalprice") + 0.5).cast("bigint").alias("x")
     )
     census = v.groupBy("x").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
@@ -180,7 +176,7 @@ def _oct_sql(k: int) -> str:
     bench=False,
 )
 def q_robust_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _t(spark, sf_dir, "orders").select(
+    v = load_table(spark, sf_dir, "orders").select(
         F.floor(F.col("o_totalprice") + 0.5).cast("bigint").alias("x")
     )
     census = v.groupBy("x").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
@@ -286,7 +282,7 @@ def q_robust_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_qq_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority").isin("1-URGENT", "5-LOW"))
         .select(
             F.floor(F.col("o_totalprice") + 0.5).cast("bigint").alias("x"),

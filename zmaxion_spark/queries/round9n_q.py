@@ -33,10 +33,6 @@ from zmaxion_spark.functions.ranks import bucketed_row_number, ntile_from_rn
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #487 stream_regression — exact OLS as streaming state
 # ---------------------------------------------------------------------------
@@ -213,8 +209,8 @@ def q_stream_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_empirical_copula(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     base = (
         orders.join(li, orders.o_orderkey == li.l_orderkey)
         .groupBy(
@@ -377,7 +373,7 @@ def q_empirical_copula(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_western_electric(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .groupBy(F.to_date(F.date_trunc("day", F.col("o_orderdate"))).alias("d"))
         .agg(
             F.sum(F.floor(F.col("o_totalprice") + 0.5).cast("bigint"))

@@ -16,10 +16,6 @@ from zmaxion_spark.catalog import load_table
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @query(
     "q_fn_string",
     oracle="""
@@ -47,7 +43,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "split_part over documents.",
 )
 def q_fn_string(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         F.upper("lang").alias("lang_up"),
@@ -94,7 +90,7 @@ def q_fn_string(spark: SparkSession, sf_dir: str) -> DataFrame:
     "unix_timestamp floors like FLOOR(EPOCH()).",
 )
 def q_fn_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     od = F.col("o_orderdate")
     return o.filter(
         od.between(F.lit("1996-01-01").cast("timestamp"), F.lit("1996-12-31").cast("timestamp"))
@@ -141,7 +137,7 @@ def q_fn_datetime(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ROUND(double,1) agrees on these 2dp-generated values.",
 )
 def q_fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 1000)
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") <= 1000)
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -198,7 +194,7 @@ def q_fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     "JVM-side — no Python.",
 )
 def q_fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     emb_d = F.transform("embedding", lambda x: x.cast("double"))
     return e.select(
         "vec_id",
@@ -240,7 +236,7 @@ def q_fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     "extraction, validity, missing-path null. JVM-side JSON path eval.",
 )
 def q_fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
+    ev = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     k = F.get_json_object("props", "$.k")
     return ev.select(
         "event_id",
@@ -268,7 +264,7 @@ def q_fn_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the hashed input.",
 )
 def q_fn_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     # xxhash64 grouping must be injective on this corpus: distinct
     # hash count == distinct text count (what the oracle computes).
     n_hashes = d.select(F.countDistinct(F.xxhash64("text")).alias("n"))
@@ -304,7 +300,9 @@ def q_fn_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "compares values, not container reprs.",
 )
 def q_fn_struct_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_type").isin("click", "error"))
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("event_type").isin("click", "error")
+    )
     s = F.named_struct(F.lit("user_id"), F.col("user_id"), F.lit("etype"), F.col("event_type"))
     m = F.create_map(F.lit("value_x10"), F.round(F.col("value") * 10, 6))
     return ev.select(
@@ -340,7 +338,7 @@ def q_fn_struct_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shredded-path future of semi-structured corpora at 100 TB.",
 )
 def q_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     doc = F.to_json(
         F.struct(
             F.col("event_type").alias("t"),

@@ -24,14 +24,9 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from zmaxion_spark.catalog import load_table
+from zmaxion_spark.catalog import fixture_cache_dir, load_table
 from zmaxion_spark.queries.helpers import DEC, sql_dsum
 from zmaxion_spark.queries.registry import query
-from zmaxion_spark.queries.sources_q import _roundtrip_dir
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -96,12 +91,12 @@ _SQL_COORD = (
     "equi-join key.",
 )
 def q_spatial_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         _coord("lat:", F.col("c_custkey"), 120000, 60).alias("lat"),
         _coord("lon:", F.col("c_custkey"), 360000, 180).alias("lon"),
     )
-    supp = _t(spark, sf_dir, "supplier").select(
+    supp = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey",
         _coord("lat:", F.col("s_suppkey"), 120000, 60).alias("lat"),
         _coord("lon:", F.col("s_suppkey"), 360000, 180).alias("lon"),
@@ -176,7 +171,7 @@ _MV_CUTOFF = "1998-01-01"
     "after the merge.",
 )
 def q_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     cutoff = F.lit(_MV_CUTOFF).cast("timestamp")
 
     def partial(df: DataFrame) -> DataFrame:
@@ -246,9 +241,9 @@ def zorder_value(x: Column, y: Column, bits: int = 16) -> Column:
     bench=False,  # writes a one-time layout; scan itself is the point
 )
 def q_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _roundtrip_dir(sf_dir, "zorder", source_table="lineitem")
+    path = fixture_cache_dir(sf_dir, "lineitem", "zorder")
     if not os.path.isdir(path):
-        li = _t(spark, sf_dir, "lineitem")
+        li = load_table(spark, sf_dir, "lineitem")
         z = zorder_value(
             (F.col("l_partkey") % 65536).cast("long"),
             (F.col("l_suppkey") % 65536).cast("long"),
@@ -382,8 +377,8 @@ def q_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     for k, v in _BLOOM_CONFS.items():
         spark.conf.set(k, v)
     try:
-        li = _t(spark, sf_dir, "lineitem")
-        o = _t(spark, sf_dir, "orders").filter(
+        li = load_table(spark, sf_dir, "lineitem")
+        o = load_table(spark, sf_dir, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
         )
         out = (
@@ -782,7 +777,7 @@ def _gh_char_sql(cell: str, chunk: int, div: str = "//") -> str:
     "Integer bit arithmetic end-to-end: hash-exact.",
 )
 def q_geohash_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         _coord("lat:", F.col("c_custkey"), 120000, 60).alias("lat"),
         _coord("lon:", F.col("c_custkey"), 360000, 180).alias("lon"),
@@ -865,7 +860,7 @@ _RB_ANCHORS = 64
     "negatives).",
 )
 def q_range_bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100)
         .cast("bigint")

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from zmaxion_spark.catalog import load_table
+from zmaxion_spark.catalog import fixture_cache_dir, load_table
 from zmaxion_spark.queries.helpers import sql_dsum
 from zmaxion_spark.queries.registry import query
 
@@ -39,23 +39,6 @@ ORDERS_LITE_SCHEMA = T.StructType(
 )
 
 
-def _roundtrip_dir(sf_dir: str, tag: str, source_table: str = "") -> str:
-    """Cache dir for a fixture round-trip, keyed by the SOURCE file's
-    identity (path + size + mtime) — so a regenerated fixture (the
-    round-2→3 lesson: testdata changed under us mid-build) can never
-    be served from a stale materialized copy."""
-    ident = sf_dir
-    if source_table:
-        src = f"{sf_dir}/{source_table}.parquet"
-        try:
-            st = os.stat(src)
-            ident = f"{src}:{st.st_size}:{int(st.st_mtime)}"
-        except OSError:
-            ident = src
-    key = hashlib.md5(ident.encode()).hexdigest()[:8]
-    return f"/tmp/zmx-sources/{key}/{tag}"
-
-
 @query(
     "q_scan_csv",
     oracle="""
@@ -68,7 +51,7 @@ def _roundtrip_dir(sf_dir: str, tag: str, source_table: str = "") -> str:
     "CSV (header, no inference), read back, broadcast-joined to region.",
 )
 def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _roundtrip_dir(sf_dir, "nation_csv", "nation")
+    path = fixture_cache_dir(sf_dir, "nation", "nation_csv")
     if not os.path.exists(path):
         load_table(spark, sf_dir, "nation").coalesce(1).write.mode("overwrite").option(
             "header", True
@@ -97,7 +80,7 @@ def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     "serialization), read back, aggregated.",
 )
 def q_scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _roundtrip_dir(sf_dir, "orders_json", "orders")
+    path = fixture_cache_dir(sf_dir, "orders", "orders_json")
     if not os.path.exists(path):
         load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -128,7 +111,7 @@ def q_scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     "a full-corpus pass into a directory listing plus two subtrees.",
 )
 def q_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _roundtrip_dir(sf_dir, "documents_by_lang", "documents")
+    path = fixture_cache_dir(sf_dir, "documents", "documents_by_lang")
     if not os.path.exists(path):
         load_table(spark, sf_dir, "documents").write.mode(
             "overwrite"
@@ -171,7 +154,7 @@ LINEITEM_LITE_SCHEMA = T.StructType(
     bench=False,  # writes real files on first touch; correctness demo
 )
 def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _roundtrip_dir(sf_dir, "lineitem_orc", "lineitem")
+    path = fixture_cache_dir(sf_dir, "lineitem", "lineitem_orc")
     if not os.path.exists(path):
         load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice"
@@ -211,7 +194,7 @@ def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_compact_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zmaxion_spark.layout import compact
 
-    path = _roundtrip_dir(sf_dir, "orders_small_files", "orders")
+    path = fixture_cache_dir(sf_dir, "orders", "orders_small_files")
     if not os.path.exists(path):
         load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus"
@@ -299,8 +282,6 @@ def q_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,  # writes warehouse tables; layout demo
 )
 def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-
     from zmaxion_spark.layout import write_bucketed_table
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:6]
@@ -534,7 +515,7 @@ def q_stream_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark.dataSource.register(TopicSinkDataSource)
     chunks = _events_chunks(spark, sf_dir)
-    sink_dir = f"{os.path.dirname(chunks)}/pysink_out"
+    sink_dir = fixture_cache_dir(sf_dir, "events", "pysink_out")
     n_chunks = len([f for f in os.listdir(chunks) if f.endswith(".parquet")])
     if len(committed_batch_ids(sink_dir)) != n_chunks:
         import shutil

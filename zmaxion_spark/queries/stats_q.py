@@ -37,10 +37,6 @@ from zmaxion_spark.queries.helpers import dsum, sql_dsum
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _r9(col, alias: str):
     """Quantize a double through DECIMAL(38,9) and back.
 
@@ -108,7 +104,7 @@ def _r6(col, alias: str):
     "merge-order ulp drift bit-exactly (see _r9).",
 )
 def q_regression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
         _r9(F.corr("l_quantity", "l_extendedprice"), "qp_corr"),
@@ -173,7 +169,7 @@ def q_regression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "error")
         .select(
             (F.col("user_id") % 8).alias("bucket"),
@@ -237,7 +233,7 @@ _XML_SCHEMA = T.StructType(
     "aggregate order-independent.",
 )
 def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     doc = F.to_xml(
         F.struct(
             F.col("o_orderkey").alias("k"),
@@ -299,7 +295,7 @@ _FH_DIMS = 64
     "combined. A 100 TB corpus vectorizes in one scan.",
 )
 def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
     x = F.conv(F.substring(F.md5(F.col("term").cast("binary")), 1, 8), 16, 10).cast(
         "long"
@@ -986,7 +982,7 @@ def q_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy(F.date_trunc("day", F.col("ts")).alias("dd")).agg(
         F.sum(F.round(F.col("value") * 100).cast("bigint"))
         .cast("bigint")
@@ -1061,7 +1057,7 @@ def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cvar_tail_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("priority"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
     )
@@ -1165,7 +1161,7 @@ def q_cvar_tail_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    f = _t(spark, sf_dir, "events").groupBy("user_id").agg(
+    f = load_table(spark, sf_dir, "events").groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
     r = f.select(

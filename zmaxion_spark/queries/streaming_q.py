@@ -820,10 +820,8 @@ def q_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sketch = sketch_t.groupBy("j", "b").agg(F.max("c").alias("c"))
     # Probe set and estimate shape identical to the batch CMS (#185).
-    from zmaxion_spark.catalog import load_table as _lt
-
     probes = (
-        _lt(spark, sf_dir, "events")
+        load_table(spark, sf_dir, "events")
         .select("user_id")
         .filter(F.col("user_id") % 7 == 0)
         .groupBy("user_id")

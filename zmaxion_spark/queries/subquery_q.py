@@ -28,10 +28,6 @@ from zmaxion_spark.queries.helpers import DEC, davg, dsum, sql_davg, sql_dsum
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #95 correlated scalar subquery (TPC-H Q17 shape)
 # ---------------------------------------------------------------------------
@@ -65,8 +61,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "bit-identical operands, so the result hashes exactly.",
 )
 def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
     per_part = li.groupBy(F.col("l_partkey").alias("pa_partkey")).agg(
         davg("l_quantity", "avg_qty")
     )
@@ -115,9 +111,9 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "TakeOrderedAndProject, never a global sort.",
 )
 def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     big = (
         li.groupBy(F.col("l_orderkey").alias("b_orderkey"))
         .agg(dsum("l_quantity", "sum_qty"))
@@ -165,8 +161,8 @@ def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     "its build set broadcasts.",
 )
 def q22_wealthy_inactive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     avg_bal = cust.filter(F.col("c_acctbal") > 0.0).agg(davg("c_acctbal", "global_avg"))
     big_orders = orders.filter(F.col("o_totalprice") > 300000).select("o_custkey")
     return (
@@ -211,7 +207,7 @@ def q22_wealthy_inactive(spark: SparkSession, sf_dir: str) -> DataFrame:
     "divide) are bit-exact.",
 )
 def q_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     m = orders.groupBy(
         "o_orderstatus", F.date_trunc("month", "o_orderdate").alias("month")
     ).agg(dsum("o_totalprice", "revenue"))
@@ -262,7 +258,7 @@ def q_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     "change-rows subset, already partitioned correctly.",
 )
 def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w_all = Window.partitionBy("user_id").orderBy("ts", "event_id")
     changed = ~F.col("event_type").eqNullSafe(F.lag("event_type").over(w_all))
     changes = ev.select(
@@ -315,8 +311,6 @@ def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     "scan joined per round (broadcast the frontier when small).",
 )
 def q_recursive_bom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from zmaxion_spark.catalog import load_table
-
     part = load_table(spark, sf_dir, "part")
     # The walk visits every partkey once, so total recursion output is
     # bounded by |part| — but Spark's cteRecursionRowLimit safety valve
@@ -408,7 +402,7 @@ def q_recursive_bom(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doubles hash exactly.",
 )
 def q_curriculum_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("lang").orderBy("n_chars", "doc_id")
     decile = F.ntile(10).over(w)
     return d.select(
@@ -450,7 +444,7 @@ def q_curriculum_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "order-free count/checksum summaries.",
 )
 def q_set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     f = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     o = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey")
 
@@ -553,7 +547,7 @@ def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "luck of the register population.)",
 )
 def q_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     per_seg = cust.groupBy("c_mktsegment").agg(
         F.expr("hll_sketch_agg(c_custkey, 16)").alias("sk"),
         F.countDistinct("c_custkey").cast("bigint").alias("exact_distinct"),
@@ -624,7 +618,7 @@ def q_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     "guarantee.",
 )
 def q_hll_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     g = cust.groupBy("c_mktsegment").agg(
         F.expr("hll_sketch_estimate(hll_sketch_agg(c_custkey, 16))")
         .cast("double")

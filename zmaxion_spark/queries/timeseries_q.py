@@ -29,10 +29,6 @@ from zmaxion_spark.queries.helpers import dsum, sql_dsum
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #86 gap-based sessionization (batch twin of the session window)
 # ---------------------------------------------------------------------------
@@ -81,7 +77,7 @@ _SESSION_GAP_US = 4 * 3600 * 1_000_000  # 4 hours
     "timezone/precision drift exists.",
 )
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "value", F.unix_micros("ts").alias("us")
     )
     sess = TS.sessionize(
@@ -140,7 +136,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the partial-agg groupBy.",
 )
 def q_ts_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_type", F.date_trunc("hour", "ts").alias("hour"), "value"
     )
     agg = e.groupBy("event_type", "hour").agg(
@@ -209,7 +205,7 @@ _HALF_LIFE_US = 7 * 86400 * 1_000_000  # one half-life step per 7 days
     "groupBy — the standard shape for trillion-row feature decay.",
 )
 def q_decayed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "user_id", "value", F.unix_micros("ts").alias("us")
     )
     ref = e.agg(F.max("us").alias("ref_us"))
@@ -270,7 +266,7 @@ def q_decayed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "key space grows with the data).",
 )
 def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select("user_id", "value")
+    e = load_table(spark, sf_dir, "events").select("user_id", "value")
     st = ST.zscore_stats(e, "user_id", "value")
     f = (
         e.join(st, "user_id")
@@ -324,7 +320,7 @@ def q_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_rolling_time_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         F.unix_timestamp("ts").alias("ts_sec"),
@@ -403,7 +399,7 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.date_trunc("day", F.col("ts")).alias("dd")).agg(
         F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("bigint").alias("cents")
     )
@@ -494,7 +490,7 @@ _FC_LAG = 7  # weekly seasonal-naive: forecast(d) = actual(d - 7)
 def q_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("dd")
     ).agg(
@@ -563,7 +559,7 @@ _SLO_FAST_BURN = 2.0  # alerting threshold on the burn multiple
 def q_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     h = ev.groupBy(F.date_trunc("hour", F.col("ts")).alias("hour")).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
@@ -651,7 +647,7 @@ def q_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "joins, no state beyond two structs per user-partition scan.",
 )
 def q_pattern_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
         F.unix_micros("ts").alias("us"),
@@ -753,7 +749,7 @@ def q_pattern_negation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "aggregate; no global sort, no driver state.",
 )
 def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
         F.round(F.col("value") * 100).cast("bigint").alias("cents"),
@@ -863,7 +859,7 @@ def _mad_rank_sql(src: str, val: str, part: str) -> str:
     "by series; the deviation join re-shuffles only (series, cents).",
 )
 def q_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.round(F.col("value") * 100).cast("bigint").alias("cents"),
     )
@@ -991,7 +987,7 @@ _CCF_MAXLAG = 3
     "(series, day) cells; the lag join shifts cell keys, never rows.",
 )
 def q_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("pri"),
         F.datediff(
             F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
@@ -1154,7 +1150,7 @@ def q_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long")
         % 600
     ) * 1_000_000
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
@@ -1282,7 +1278,7 @@ def q_watermark_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "|series|-row algebra — the #305 grid discipline.",
 )
 def q_dispersion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),
@@ -1401,7 +1397,7 @@ def q_dispersion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     "O(n log n) rank formulation instead.",
 )
 def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),
@@ -1560,7 +1556,7 @@ def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shrinks data before any collect_list.",
 )
 def q_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_type", F.date_trunc("day", "ts").alias("day")
     )
     agg = e.groupBy("event_type", "day").agg(
@@ -1715,7 +1711,7 @@ _TS_GRID_SQL = """
     bench=False,
 )
 def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),
@@ -1887,7 +1883,7 @@ _ACF_CHI2_95 = (
     bench=False,
 )
 def q_acf_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),
@@ -2073,7 +2069,7 @@ def q_acf_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_ewma_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),
@@ -2241,7 +2237,7 @@ _PH_LAMBDA = "15"   # alarm threshold (shared literal)
     bench=False,
 )
 def q_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),
@@ -2374,7 +2370,7 @@ _PIN_QS = ("0.1", "0.5", "0.9")
     bench=False,
 )
 def q_pinball_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("dd")
     ).agg(
@@ -2473,7 +2469,7 @@ def q_pinball_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
 )
 def q_forecast_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "events").select(
+    o = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.datediff(
             F.col("ts").cast("timestamp").cast("date"),

@@ -32,10 +32,6 @@ from zmaxion_spark.queries.helpers import dsum, sql_dsum
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 _REV = "l_extendedprice * (1 - l_discount)"
 
 
@@ -73,11 +69,11 @@ def _rev_col():
     "to the orders scan.",
 )
 def q04_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     late = o.join(
         li,
         (li.l_orderkey == o.o_orderkey)
@@ -128,17 +124,17 @@ def q04_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     "lineitem scan.",
 )
 def q07_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") <= F.lit("1997-12-31").cast("timestamp"))
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = _t(spark, sf_dir, "nation").select(
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
     )
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation")
     )
     j = (
@@ -215,21 +211,25 @@ def q07_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     "on their join keys.",
 )
 def q08_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY").select("p_partkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    o = _t(spark, sf_dir, "orders").filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    p = (
+        load_table(spark, sf_dir, "part")
+        .filter(F.col("p_type") == "ECONOMY")
+        .select("p_partkey")
+    )
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") <= F.lit("1997-12-31").cast("timestamp"))
     ).select("o_orderkey", "o_custkey", "o_orderdate")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n1 = _t(spark, sf_dir, "nation").select(
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n1 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation")
     )
-    n2 = _t(spark, sf_dir, "nation").select(
+    n2 = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c_nk"), F.col("n_regionkey").alias("c_rk")
     )
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA").select(
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA").select(
         "r_regionkey"
     )
     j = (
@@ -300,13 +300,13 @@ def q08_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pre-aggregation so the shuffle carries (nation, year) partials.",
 )
 def q09_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO").select(
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO").select(
         "p_partkey", "p_retailprice"
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     amount = _rev_col() - F.col("p_retailprice") * 0.6 * F.col("l_quantity")
     j = (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
@@ -359,13 +359,13 @@ def q09_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "no full sort); nation broadcasts.",
 )
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    n = load_table(spark, sf_dir, "nation")
     j = (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, o.o_orderkey == li.l_orderkey)
@@ -415,11 +415,11 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     "two partial counters per class.",
 )
 def q12_ship_lag_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
     j = li.join(o, li.l_orderkey == o.o_orderkey)
@@ -474,9 +474,11 @@ def q12_ship_lag_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     "counts| rows.",
 )
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") != "P").select(
-        "o_custkey", "o_orderkey"
+    c = load_table(spark, sf_dir, "customer").select("c_custkey")
+    o = (
+        load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderstatus") != "P")
+        .select("o_custkey", "o_orderkey")
     )
     per_cust = (
         c.join(o, c.c_custkey == o.o_custkey, "left")
@@ -521,7 +523,7 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "broadcast, not a driver collect.",
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
@@ -529,7 +531,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsum(_rev_col(), "total_revenue")
     )
     mx = rev.agg(F.max("total_revenue").alias("_mx"))
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         s.join(rev, s.s_suppkey == rev.supplier_no)
         .join(F.broadcast(mx), F.col("total_revenue") == F.col("_mx"))
@@ -568,12 +570,12 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(DISTINCT suppkey) per small group rides the one fact shuffle.",
 )
 def q16_part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    p = _t(spark, sf_dir, "part").filter(
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
         & F.col("p_size").isin(1, 9, 14, 19, 23, 36, 45, 49)
     ).select("p_partkey", "p_brand", "p_type", "p_size")
-    bad = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
+    bad = load_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
         F.col("s_suppkey").alias("l_suppkey")
     )
     j = li.join(F.broadcast(p), li.l_partkey == p.p_partkey).join(
@@ -632,11 +634,11 @@ def q16_part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "co-partitioned, no fan-out.",
 )
 def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "STANDARD").select(
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "STANDARD").select(
         "p_partkey"
     )
     shipped = (
@@ -647,7 +649,7 @@ def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals = shipped.groupBy("l_partkey").agg(
         F.sum(F.col("qty").cast("decimal(38,6)")).cast("double").alias("part_qty")
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     dom = shipped.join(totals, "l_partkey").filter(
         F.col("qty") > 0.5 * F.col("part_qty")
     )

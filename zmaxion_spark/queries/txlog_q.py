@@ -24,13 +24,12 @@ format must be a transparent layer over the data:
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from zmaxion_spark.catalog import load_table
+from zmaxion_spark.catalog import fixture_cache_dir, load_table
 from zmaxion_spark.queries.helpers import dsum, sql_dsum
 from zmaxion_spark.queries.registry import query
 from zmaxion_spark.txlog import TxTable
@@ -38,28 +37,17 @@ from zmaxion_spark.txlog import TxTable
 # Price band for the skipping query: inside the populated range at
 # every SF, so both engines see rows and several files fall outside.
 _LO, _HI = 50_000.0, 150_000.0
-_FMT = "f2"  # txlog protocol generation (see _table_root)
-
-
-def _table_root(sf_dir: str) -> str:
-    src = f"{sf_dir}/orders.parquet"
-    try:
-        st = os.stat(src)
-        ident = f"{src}:{st.st_size}:{int(st.st_mtime)}"
-    except OSError:
-        ident = src
-    # _FMT is the table-format protocol generation: bumping it orphans
-    # caches built by an older txlog (e.g. pre-dataChange markers) so a
-    # protocol change can never read a stale-format cache.
-    key = hashlib.md5(f"{ident}:{_FMT}".encode()).hexdigest()[:10]
-    return f"/tmp/zmx-txlog/{key}/orders_tx"
+_FMT = "f2"  # txlog protocol generation (see orders_tx)
 
 
 def orders_tx(spark: SparkSession, sf_dir: str) -> TxTable:
     """Build (or reuse) the logged orders table for this fixture
     generation. The three-commit history above; idempotent — a
     complete build is detected by its exact version set."""
-    root = _table_root(sf_dir)
+    # _FMT is the table-format protocol generation: bumping it orphans
+    # caches built by an older txlog (e.g. pre-dataChange markers) so a
+    # protocol change can never read a stale-format cache.
+    root = fixture_cache_dir(sf_dir, "orders", "orders_tx", version=_FMT)
     t = TxTable(root, stat_cols=("o_totalprice",))
     if t.versions() == [0, 1, 2]:
         return t
@@ -171,10 +159,7 @@ def _events_chunks(spark: SparkSession, sf_dir: str) -> str:
     import shutil
     import uuid
 
-    src = f"{sf_dir}/events.parquet"
-    st = os.stat(src)
-    key = hashlib.md5(f"{src}:{st.st_size}:{int(st.st_mtime)}".encode()).hexdigest()[:10]
-    final = f"/tmp/zmx-txlog/{key}/events_chunks"
+    final = fixture_cache_dir(sf_dir, "events", "events_chunks")
     if os.path.isdir(final) and len(
         [f for f in os.listdir(final) if f.endswith(".parquet")]
     ) == _N_CHUNKS:
@@ -207,7 +192,7 @@ def events_ingest_table(spark: SparkSession, sf_dir: str) -> TxTable:
 
     from zmaxion_spark.streaming.pipeline import run_foreach_batch
 
-    root = f"{os.path.dirname(_events_chunks(spark, sf_dir))}/events_tx"
+    root = fixture_cache_dir(sf_dir, "events", "events_tx")
     t = TxTable(root)
     if t._applied_batches(_INGEST_SOURCE) != _N_CHUNKS - 1:
         import shutil
@@ -645,7 +630,7 @@ def _silver_table(spark: SparkSession, sf_dir: str) -> TxTable:
     from zmaxion_spark.streaming.txlog_source import stream_txlog
 
     bronze = events_ingest_table(spark, sf_dir)
-    root = os.path.join(os.path.dirname(bronze.path), "events_silver")
+    root = fixture_cache_dir(sf_dir, "events", "events_silver")
     silver = TxTable(root)
     if silver._applied_batches("silver") >= 0:
         return silver  # the availableNow drain is a single batch
@@ -1009,24 +994,15 @@ _SQL_NET_DELAY = (
 )
 
 
-def _bitemporal_root(sf_dir: str) -> str:
-    src = f"{sf_dir}/events.parquet"
-    try:
-        st = os.stat(src)
-        ident = f"{src}:{st.st_size}:{int(st.st_mtime)}"
-    except OSError:
-        ident = src
-    key = hashlib.md5(f"{ident}:{_FMT}:bitemporal2".encode()).hexdigest()[:10]
-    return f"/tmp/zmx-txlog/{key}/events_bt"
-
-
 def _events_bt(spark: SparkSession, sf_dir: str) -> TxTable:
     """Two-commit bitemporal event log: commit 0 holds what had
     ARRIVED by the wall-clock cutoff H (event time + the #308 md5
     network delay), commit 1 appends the stragglers — so transaction
     version 0 is the state of knowledge at H and version 1 the
     corrected record."""
-    root = _bitemporal_root(sf_dir)
+    root = fixture_cache_dir(
+        sf_dir, "events", "events_bt", version=f"{_FMT}:bitemporal2"
+    )
     t = TxTable(root)
     if t.versions() == [0, 1]:
         return t

@@ -24,10 +24,6 @@ from zmaxion_spark.queries.registry import query
 _Q6 = Decimal("0.000001")
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # #58 scalar vectorized UDF (Series → Series)
 # ---------------------------------------------------------------------------
@@ -56,7 +52,7 @@ def _py_head_token(text: pd.Series) -> pd.Series:
     "token, verified against the SQL equivalents.",
 )
 def q_udf_scalar_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         _py_token_count("text").alias("n_tokens"),
@@ -98,7 +94,7 @@ def _py_count(v: pd.Series) -> int:
     "Python, bit-matching the engines' decimal cast+sum.",
 )
 def q_udaf_grouped_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         _py_decimal_sum("value").alias("total_value"),
         _py_count("value").alias("n"),
@@ -129,7 +125,7 @@ def q_udaf_grouped_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     "O(shards), not O(users), while keeping identical per-user results.",
 )
 def q_udf_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
 
     def gaps(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["user_id", "ts", "event_id"])
@@ -170,7 +166,9 @@ def _py_label_struct(s: pd.DataFrame) -> pd.Series:
     "pandas DataFrame (Arrow struct → columns).",
 )
 def q_udf_struct_arg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_type").isin("signup", "view"))
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("event_type").isin("signup", "view")
+    )
     s = F.struct(F.col("user_id"), F.col("event_type"))
     return ev.select("event_id", _py_label_struct(s).alias("label"))
 
@@ -209,7 +207,7 @@ def _decode_media(mime: str, payload: bytes) -> dict:
     "plumbing: schema, batching, per-row decode dispatch.",
 )
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     media = d.select(
         "doc_id",
         F.when(F.col("doc_id") % 2 == 0, "image/png").otherwise("audio/wav").alias("mime"),
@@ -308,7 +306,7 @@ def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 5 == 0)
         .select(
             "doc_id",
@@ -397,7 +395,7 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zmaxion_spark.functions.media import decode_wav_samples, synthesize_wav
 
     d = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 10 == 1)
         .select("doc_id")
     )
@@ -518,7 +516,7 @@ def q_media_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = (
-        _t(spark, sf_dir, "documents")
+        load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 7 == 2)
         .select(
             "doc_id",
@@ -588,7 +586,7 @@ def q_udtf_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield i, tok
 
     spark.udtf.register("zmx_split3", SplitFirst3)
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("_udtf_docs")
+    load_table(spark, sf_dir, "documents").createOrReplaceTempView("_udtf_docs")
     return spark.sql(
         "SELECT d.doc_id, s.pos, s.term FROM _udtf_docs d, LATERAL zmx_split3(d.text) s"
     )
@@ -631,7 +629,7 @@ def q_udtf_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     "maxRecordsPerBatch.",
 )
 def q_arrow_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
     def kernel(batches):
         import numpy as np
@@ -701,7 +699,7 @@ def q_udf_grouped_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pyarrow as pa
 
-    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
 
     def kernel(tbl: "pa.Table") -> "pa.Table":
         event_id = tbl.column("event_id").to_numpy(zero_copy_only=False)

@@ -35,10 +35,6 @@ from zmaxion_spark.functions import text as TX
 from zmaxion_spark.queries.registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _d(col):
     return F.transform(col, lambda x: x.cast("double"))
 
@@ -97,7 +93,7 @@ _SSJ_ORACLE = f"""
     "of what MinHash-LSH (#70) approximates.",
 )
 def q_set_sim_join_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     base = (
         d.select("doc_id", TX.shingles(F.split("text", " "), 3).alias("arr"))
         .filter(F.size("arr") >= 1)
@@ -233,15 +229,6 @@ def _jl_oracle() -> str:
     """
 
 
-def _spark_signdot(vec, plane: list[float]):
-    lits = F.array(*[F.lit(v) for v in plane])
-    return F.lit(_JL_SCALE) * F.aggregate(
-        F.zip_with(vec, lits, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 @query(
     "q_jl_projection",
     oracle=_jl_oracle(),
@@ -260,7 +247,7 @@ def _spark_signdot(vec, plane: list[float]):
     "scan and the pair join shuffles only (id, 16 floats).",
 )
 def q_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     # One 16x64 literal + a transform over plane indices instead of 16
     # separately-inlined plane expressions (~3k expression nodes): the
     # query was PLANNING-bound (wall 2.6 s with <0.4 s of stage time —
@@ -406,7 +393,7 @@ def _pca_oracle() -> str:
     "reduce state, and the driver step is O(T*d^2) flops.",
 )
 def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     cov = _M.cov_cells(e)
     # Bounded driver pull: d(d+1)/2 = 2080 cells, independent of corpus
     # size. Mirror the triangle, then iterate with the exact left-fold
@@ -499,7 +486,7 @@ _CTN_T = 0.9  # containment threshold |A ∩ B| / |A|
     "shingle) only.",
 )
 def q_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     base = (
         d.select("doc_id", TX.shingles(F.split("text", " "), 3).alias("arr"))
         .filter(F.size("arr") >= 1)
@@ -617,7 +604,7 @@ def _mat_block_sql(d: int) -> str:
     bench=False,
 )
 def q_matryoshka_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings").select(
+    e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     q = e.filter(F.col("vec_id") < _MAT_NQ).select(

@@ -4,7 +4,7 @@
 file-directory source (the stand-in for a topic). Schemas are always
 explicit (engine policy, SURVEY §1.3) — required by Spark streaming
 anyway. The explicit schema is taken from the fixture file's own
-footer (one cheap metadata read, cached per sf_dir) so the stream
+footer (one cheap metadata read, cached per fixture file) so the stream
 sees exactly what the batch loader sees; ``ts`` is then normalized by
 the same ``catalog.normalize_events_ts`` rule, so stream/batch parity
 holds to the microsecond across generator versions.
@@ -12,30 +12,31 @@ holds to the microsecond across generator versions.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from zmaxion_spark.catalog import (
+    fixture_cache_dir,
+    fixture_stamp,
+    normalize_events_ts,
+    table_path,
+)
 from zmaxion_spark.session import tune
 
-_EVENTS_SCHEMA_CACHE: dict[tuple, T.StructType] = {}
+_EVENTS_SCHEMA_CACHE: dict[str, T.StructType] = {}
 
 
 def _events_file_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     """Footer schema of the events fixture (streaming needs it
-    explicit). Cached by file identity (path+size+mtime), not just
-    path, so a regenerated fixture is never served a stale schema."""
-    import os
-
-    path = f"{sf_dir}/events.parquet"
-    try:
-        st = os.stat(path)
-        key = (path, st.st_size, int(st.st_mtime))
-    except OSError:
-        key = (path, 0, 0)
+    explicit). Cached by file identity (``catalog.fixture_stamp``), not
+    just path, so a regenerated fixture is never served a stale schema."""
+    key = fixture_stamp(sf_dir, "events")
     schema = _EVENTS_SCHEMA_CACHE.get(key)
     if schema is None:
-        schema = spark.read.parquet(path).schema
+        schema = spark.read.parquet(table_path(sf_dir, "events")).schema
         _EVENTS_SCHEMA_CACHE[key] = schema
     return schema
 
@@ -48,27 +49,18 @@ def _as_stream_dir(sf_dir: str, table: str) -> str:
     stream does not recurse into a symlinked subdirectory (it would
     silently deliver zero rows), so link each part file flat, which
     also gives the replay natural multi-file micro-batching."""
-    import hashlib
-    import os
-
     # Always link ABSOLUTE targets: a relative sf_dir would otherwise
     # produce links resolved relative to the cache dir — every one
     # broken, and a broken link both delivers a silent 0-row stream
     # AND fails os.path.exists, so the "already linked" check retried
     # the symlink into FileExistsError (measured at the sf10 smoke,
     # invoked with a relative .scratch path).
-    src = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
-    # Key on size+mtime as well as the path (the _events_chunks rule):
-    # regenerating a directory-shaped fixture in place writes new
-    # random part-file names under the SAME path, and a path-only key
-    # would keep serving dangling links to the deleted parts.
-    try:
-        st = os.stat(src)
-        stamp = f"{src}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        stamp = src
-    key = hashlib.md5(stamp.encode()).hexdigest()[:8]
-    d = f"/tmp/zmx-stream/{key}/{table}"
+    src = os.path.abspath(table_path(sf_dir, table))
+    # The cache key covers size+mtime as well as the path: regenerating
+    # a directory-shaped fixture in place writes new random part-file
+    # names under the SAME path, and a path-only key would keep serving
+    # dangling links to the deleted parts.
+    d = fixture_cache_dir(sf_dir, table, table)
     os.makedirs(d, exist_ok=True)
     # Belt-and-braces for dir fixtures whose mtime did not move: drop
     # any cached link whose target no longer exists.
@@ -84,9 +76,6 @@ def _as_stream_dir(sf_dir: str, table: str) -> str:
             os.symlink(target, link)
 
     if os.path.isdir(src):
-        stale = f"{d}/{table}.parquet"  # pre-fix cache: link to the dir
-        if os.path.islink(stale) and os.path.isdir(stale):
-            os.unlink(stale)
         for part in sorted(os.listdir(src)):
             if part.endswith(".parquet"):
                 _link(f"{d}/{part}", f"{src}/{part}")
@@ -97,8 +86,6 @@ def _as_stream_dir(sf_dir: str, table: str) -> str:
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unbounded view of the events table (file-stream 'topic')."""
-    from zmaxion_spark.catalog import normalize_events_ts
-
     tune(spark)
     raw = (
         spark.readStream.schema(_events_file_schema(spark, sf_dir))

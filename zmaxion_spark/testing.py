@@ -17,7 +17,7 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
-from zmaxion_spark.catalog import TABLES
+from zmaxion_spark.catalog import TABLES, table_path
 
 
 def duckdb_connect(sf_dir: str):
@@ -32,7 +32,7 @@ def duckdb_connect(sf_dir: str):
 
     con = duckdb.connect()
     for t in TABLES:
-        src = f"{sf_dir}/{t}.parquet"
+        src = table_path(sf_dir, t)
         if os.path.isdir(src):
             src = f"{src}/*.parquet"
         con.execute(
