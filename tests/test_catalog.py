@@ -183,3 +183,16 @@ def test_cache_root_follows_tempfile_gettempdir(tmp_path, monkeypatch):
     assert fixture_cache_dir(str(sf), "orders", "t").startswith(
         os.path.join(str(b), "zmx-cache") + os.sep
     )
+
+
+def test_half_built_cache_is_rebuilt(spark, duck, tmp_path, monkeypatch):
+    """A cache dir left behind by a build killed partway (no
+    ``_SUCCESS`` marker) is rebuilt, not served with missing rows."""
+    from zmaxion_spark.queries import REGISTRY
+    from zmaxion_spark.testing import run_query_pair
+
+    monkeypatch.setattr(tempfile, "tempdir", None)
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    os.makedirs(fixture_cache_dir(SF_SMOKE, "nation", "nation_csv"))
+    res = run_query_pair(spark, duck, REGISTRY["q_scan_csv"], SF_SMOKE)
+    assert res.ok, res.detail

@@ -1,9 +1,12 @@
 """Source guards: ``zmaxion_spark.catalog`` is the one owner of the
-fixture layout and of fixture-derived cache keys. These checks parse
-the package with ``ast`` and fail if a copy of either decision comes
-back elsewhere: a per-module table loader alias, a hard-coded
-``/tmp/`` path, a hand-rolled stat-based cache key, or a spelled-out
-``{sf_dir}/<table>.parquet`` path."""
+fixture layout and of fixture-derived cache keys, and
+``zmaxion_spark.txlog`` the one owner of the transaction log's record
+layout and commit rule. These checks parse the package with ``ast`` and
+fail if a copy of any of those decisions comes back elsewhere: a
+per-module table loader alias, a hard-coded ``/tmp/`` path, a
+hand-rolled stat-based cache key, a spelled-out
+``{sf_dir}/<table>.parquet`` path, or a log record read or raw commit
+outside ``txlog.py``."""
 
 from __future__ import annotations
 
@@ -14,6 +17,7 @@ import pytest
 
 PKG = Path(__file__).resolve().parent.parent / "zmaxion_spark"
 CATALOG = PKG / "catalog.py"
+TXLOG = PKG / "txlog.py"
 SOURCES = sorted(PKG.rglob("*.py"))
 
 
@@ -109,3 +113,27 @@ def test_fixture_path_spelled_only_in_catalog(trees):
         isinstance(n, ast.JoinedStr) and _spells_fixture_path(n)
         for n in ast.walk(trees[CATALOG])
     )
+
+
+def _touches_log_layout(node: ast.AST) -> bool:
+    """``x._read_record(...)``, ``x._commit(...)`` or ``rec["actions"]``."""
+    if isinstance(node, ast.Call):
+        f = node.func
+        return isinstance(f, ast.Attribute) and f.attr in {"_read_record", "_commit"}
+    return (
+        isinstance(node, ast.Subscript)
+        and isinstance(node.slice, ast.Constant)
+        and node.slice.value == "actions"
+    )
+
+
+def test_log_layout_known_only_to_txlog(trees):
+    hits = [
+        _where(p, n)
+        for p in SOURCES
+        if p != TXLOG
+        for n in ast.walk(trees[p])
+        if _touches_log_layout(n)
+    ]
+    assert not hits, f"use TxTable.live_files/added_files/commit_retry: {hits}"
+    assert any(_touches_log_layout(n) for n in ast.walk(trees[TXLOG]))

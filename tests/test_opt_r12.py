@@ -16,9 +16,8 @@ from pyspark.sql import functions as F
 def test_blocked_pair_max_cosine_bit_parity(spark):
     """The cell-folded census kernel must reproduce the pair-join
     census (blocked_cluster_pairs + greatest/max) bit-for-bit —
-    including a zero-norm vector (NaN cosine must stay 'greatest', not
-    be skipped), clusters smaller than one block, multi-block clusters
-    and single-member clusters (no pairs)."""
+    clusters smaller than one block, multi-block clusters and
+    single-member clusters (no pairs)."""
     import math
 
     from zmaxion_spark.functions import similarity as S
@@ -30,8 +29,8 @@ def test_blocked_pair_max_cosine_bit_parity(spark):
     for i in range(11):
         rows.append((0, 100 + i,
                      [float(((i * 13 + j * 7) % 9) - 4) / 3.0 for j in range(dim)]))
-    # cluster 1: 3 members incl. a ZERO vector (0-norm -> NaN cosine)
-    rows.append((1, 200, [0.0] * dim))
+    # cluster 1: 3 members incl. an exact duplicate pair
+    rows.append((1, 200, [-1.0, 2.0, 0.5, 0.0, 3.0]))
     rows.append((1, 201, [1.0] * dim))
     rows.append((1, 202, [1.0] * dim))  # exact dup pair -> cos 1.0
     # cluster 2: single member — contributes no pairs
@@ -46,26 +45,12 @@ def test_blocked_pair_max_cosine_bit_parity(spark):
     cos = S.dot_arrow(F.col("payload_a.v"), F.col("payload_b.v")) / (
         F.col("payload_a.n") * F.col("payload_b.n")
     )
-    # The zero vector makes the reference's JVM division 0/0: under
-    # Spark 4's default ANSI mode the OLD pair-join path would ERROR
-    # outright (DIVIDE_BY_ZERO), while the kernel yields a NaN cosine —
-    # strictly more robust; fixtures never contain a 0-norm vector.
-    # Compute the reference under ansi=false, where the JVM fold gives
-    # the same NaN the kernel does, so the parity check covers it.
-    prev_ansi = spark.conf.get("spark.sql.ansi.enabled", None)
-    try:
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-        ref = (
-            pairs.select("cluster", F.greatest("id_a", "id_b").alias("pid"),
-                         cos.alias("cos"))
-            .groupBy("cluster", "pid").agg(F.max("cos").alias("max_cos"))
-            .collect()
-        )
-    finally:
-        if prev_ansi is None:
-            spark.conf.unset("spark.sql.ansi.enabled")
-        else:
-            spark.conf.set("spark.sql.ansi.enabled", prev_ansi)
+    ref = (
+        pairs.select("cluster", F.greatest("id_a", "id_b").alias("pid"),
+                     cos.alias("cos"))
+        .groupBy("cluster", "pid").agg(F.max("cos").alias("max_cos"))
+        .collect()
+    )
     withn_flat = df.select("cluster", "vec_id", "v", S.norm(F.col("v")).alias("n"))
     fast = (
         S.blocked_pair_max_cosine(withn_flat, block=block)
@@ -75,18 +60,43 @@ def test_blocked_pair_max_cosine_bit_parity(spark):
     a = {(r["cluster"], r["pid"]): r["max_cos"] for r in ref}
     b = {(r["cluster"], r["pid"]): r["max_cos"] for r in fast}
     assert set(a) == set(b)
-    n_null = 0
     for k in a:
-        if a[k] is None:  # all pairs degenerate: both must be NULL
-            assert b[k] is None, (k, a[k], b[k])
-            n_null += 1
-        else:
-            assert a[k] == b[k] and math.copysign(1.0, a[k]) == math.copysign(
-                1.0, b[k]
-            ), (k, a[k], b[k])
-    assert n_null >= 1  # the zero vector really exercised the NULL path
+        assert a[k] == b[k] and math.copysign(1.0, a[k]) == math.copysign(
+            1.0, b[k]
+        ), (k, a[k], b[k])
     # single-member cluster contributed no census rows
     assert not any(c == 2 for c, _ in a)
+
+
+def test_blocked_pair_max_cosine_refuses_zero_norm(spark):
+    """A 0-norm vector has no cosine: the kernel must fail loudly, not
+    turn it into a NULL census entry (ADVICE r12)."""
+    import pytest
+
+    from zmaxion_spark.functions import similarity as S
+
+    df = spark.createDataFrame(
+        [(1, 200, [0.0, 0.0]), (1, 201, [1.0, 1.0])],
+        "cluster int, vec_id long, v array<double>",
+    ).select("cluster", "vec_id", "v", S.norm(F.col("v")).alias("n"))
+    with pytest.raises(Exception, match="non-zero norms"):
+        S.blocked_pair_max_cosine(df, block=4).collect()
+
+
+def test_dot_arrow_refuses_ragged_batch():
+    """A null or ragged batch raises the descriptive precondition error
+    instead of numpy's bare shape mismatch (ADVICE r12)."""
+    import pandas as pd
+    import pytest
+
+    from zmaxion_spark.functions import similarity as S
+
+    ragged = pd.Series([[1.0, 2.0], [1.0, 2.0, 3.0]])
+    dense = pd.Series([[1.0, 2.0], [3.0, 4.0]])
+    with pytest.raises(ValueError, match="non-null, fixed-dimension"):
+        S.dot_arrow.func(ragged, dense)
+    with pytest.raises(ValueError, match="non-null, fixed-dimension"):
+        S.dot_arrow.func(pd.Series([None, None]), dense)
 
 
 def test_dot_arrow_bit_parity(spark):

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 from zmaxion_spark.catalog import load_table
 from zmaxion_spark.queries.txlog_q import _HI, _LO, orders_tx
-from zmaxion_spark.txlog import CommitConflict, TxTable
+from zmaxion_spark.txlog import CommitConflict, ConcurrentModification, TxTable
 
 
 @pytest.fixture()
@@ -418,3 +418,98 @@ def test_replace_where_refuses_stray_rows_and_prunes(tmp_table, spark):
         if p in after and after[p].partition.get("o_orderstatus") != "O"
     }
     assert untouched  # F and P partitions kept their bytes
+
+
+# ---------------------------------------------------------------------------
+# One conflict rule for every writer: a rival commit that lands
+# mid-transaction is refused when it removed a file this transaction
+# read, or attached a deletion vector to a file this transaction
+# removes; DVs on files nobody removes commute.
+# ---------------------------------------------------------------------------
+
+
+def _rival_lands_after(monkeypatch, table, method, rival):
+    """Run ``rival()`` (a competing writer's commit) once, right after
+    ``table.<method>`` first returns — the lost-race state, made
+    deterministic."""
+    orig = getattr(table, method)
+
+    def hooked(*args, **kwargs):
+        out = orig(*args, **kwargs)
+        monkeypatch.setattr(table, method, orig)
+        rival()
+        return out
+
+    monkeypatch.setattr(table, method, hooked)
+
+
+def _orders_in_4_files(table, spark):
+    orders = load_table(spark, SF_SMOKE, "orders")
+    table.append(orders, n_files=4)
+    return orders
+
+
+def test_compact_over_concurrent_delete_is_refused(tmp_table, spark, monkeypatch):
+    orders = _orders_in_4_files(tmp_table, spark)
+    rival = TxTable(tmp_table.path)
+    _rival_lands_after(
+        monkeypatch, tmp_table, "_stage",
+        lambda: rival.delete_where(spark, F.col("o_orderstatus") == "O"),
+    )
+    with pytest.raises(ConcurrentModification):
+        tmp_table.compact(spark, n_files=1)
+    # the delete holds: the stale rewrite never committed over it
+    assert tmp_table.read(spark).count() == orders.filter(
+        F.col("o_orderstatus") != "O"
+    ).count()
+
+
+def test_overwrite_over_concurrent_delete_is_refused(tmp_table, spark, monkeypatch):
+    _orders_in_4_files(tmp_table, spark)
+    rival = TxTable(tmp_table.path)
+    versions = tmp_table.versions()
+    _rival_lands_after(
+        monkeypatch, tmp_table, "_stage",
+        lambda: rival.delete_where(spark, F.col("o_orderstatus") == "O"),
+    )
+    with pytest.raises(ConcurrentModification):
+        tmp_table.overwrite(load_table(spark, SF_SMOKE, "orders").limit(10))
+    assert tmp_table.versions() == versions + [versions[-1] + 1]  # rival only
+
+
+def test_delete_over_concurrent_compact_is_refused(tmp_table, spark, monkeypatch):
+    orders = _orders_in_4_files(tmp_table, spark)
+    rival = TxTable(tmp_table.path)
+    _rival_lands_after(
+        monkeypatch, tmp_table, "live_files",
+        lambda: rival.compact(spark, n_files=1),
+    )
+    with pytest.raises(ConcurrentModification):
+        tmp_table.delete_where(spark, F.col("o_orderstatus") == "O")
+    assert tmp_table.read(spark).count() == orders.count()
+
+
+def test_cluster_builds_bloom_indexes(tmp_table, spark):
+    t = TxTable(tmp_table.path + "_bloom", bloom_cols=("o_orderkey",))
+    orders = load_table(spark, SF_SMOKE, "orders")
+    t.append(orders, n_files=4)
+    t.cluster(spark, F.col("o_orderkey"), n_files=4)
+    live = t.live_files()
+    assert live and all("o_orderkey" in f.bloom for f in live)
+    keys = [r[0] for r in orders.select("o_orderkey").limit(3).collect()]
+    got = t.read(spark, bloom_point=("o_orderkey", keys))
+    assert got.filter(F.col("o_orderkey").isin(keys)).count() == 3
+
+
+def test_concurrent_deletes_on_one_file_both_hold(tmp_table, spark, monkeypatch):
+    orders = load_table(spark, SF_SMOKE, "orders")
+    tmp_table.append(orders, n_files=1)
+    rival = TxTable(tmp_table.path)
+    _rival_lands_after(
+        monkeypatch, tmp_table, "live_files",
+        lambda: rival.delete_where(spark, F.col("o_orderstatus") == "F"),
+    )
+    tmp_table.delete_where(spark, F.col("o_orderstatus") == "O")
+    assert tmp_table.read(spark).count() == orders.filter(
+        F.col("o_orderstatus") == "P"
+    ).count()

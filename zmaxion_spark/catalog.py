@@ -97,6 +97,13 @@ def fixture_cache_dir(sf_dir: str, table: str, tag: str, version: str = "") -> s
     return os.path.join(tempfile.gettempdir(), "zmx-cache", key, tag)
 
 
+def cache_built(path: str) -> bool:
+    """Whether the Spark write that builds cache dir ``path`` finished.
+    Its ``_SUCCESS`` marker lands last, so a build killed partway is
+    redone instead of being served with missing rows."""
+    return os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table; normalizes events.ts to µs timestamp."""
     tune(spark)

@@ -41,26 +41,32 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot(a, b) / denom)
 
 
+def _stack(vecs: pd.Series) -> np.ndarray:
+    """A batch of vectors as one (n, dim) float64 matrix.
+
+    Precondition of every Arrow vector kernel (ADVICE r11/r12): vectors
+    must be NON-NULL and of one fixed dimensionality. The HOF trees
+    these kernels replace yielded NULL for null vectors, but every
+    caller feeds dense fixed-dim embeddings, so a violation is a caller
+    bug and raises rather than silently degrading."""
+    try:
+        if vecs.isna().any():  # an all-null batch would stack as NaNs
+            raise ValueError("null vector")
+        return np.vstack(vecs.to_numpy()).astype(np.float64, copy=False)
+    except ValueError as e:  # null or ragged vectors
+        raise ValueError(
+            "vector kernels require non-null, fixed-dimension vectors "
+            f"(got a null/ragged batch: {e})"
+        ) from e
+
+
 def _sq_dists_exact(vecs: pd.Series, cents: list[tuple[int, list[float]]]):
     """k squared-distance columns over a batch, each folded in ascending
     index order — the same IEEE op sequence per element as the
     ``zip_with``/``aggregate`` expression ``((0+t0)+t1)+...`` with
     ``t_i=(x_i-c_i)^2``, so results are bit-identical to the HOF tree.
-    (numpy's own ``sum`` is pairwise and would NOT match.)
-
-    Precondition (ADVICE r11): vectors must be NON-NULL and of one
-    fixed dimensionality — the HOF trees these kernels replace yielded
-    null distances for null vectors, but every caller (Lloyd rounds
-    over generated/normalized embeddings) guarantees dense fixed-dim
-    input, so a violation here is a caller bug and raises rather than
-    silently degrading."""
-    try:
-        A = np.vstack(vecs.to_numpy()).astype(np.float64, copy=False)
-    except ValueError as e:  # null or ragged vectors
-        raise ValueError(
-            "lloyd kernels require non-null, fixed-dimension vectors "
-            f"(got a null/ragged batch: {e})"
-        ) from e
+    (numpy's own ``sum`` is pairwise and would NOT match.)"""
+    A = _stack(vecs)
     out = []
     for _cid, cv in cents:
         acc = np.zeros(A.shape[0])
@@ -185,15 +191,13 @@ def blocked_pair_max_cosine(
     - cos = num / (n_a * n_b): same multiply-then-divide on the same
       precomputed norms;
     - the pair SET is the blocked triangle's (diagonal cells keep
-      id_a < id_b, off-diagonal cells meet exactly once);
-    - degenerate 0-norm cosines: the kernel's 0/0 is a NaN, which the
-      NaN-skipping ``np.fmax.reduceat`` partial max ignores and the
-      Arrow boundary returns as NULL when a pid's pairs are ALL
-      degenerate — exactly Spark's non-ANSI NULL division + NULL-
-      skipping max (pinned in the parity test). Under the default ANSI
-      mode the pair-join formulation ERRORS outright on such a pair
-      (DIVIDE_BY_ZERO), so the kernel is strictly more robust there;
-      fixture embeddings never contain a 0-norm vector.
+      id_a < id_b, off-diagonal cells meet exactly once).
+
+    Vectors must be non-null, of one fixed dimension and of non-zero
+    norm; the kernel raises ``ValueError`` otherwise. A 0-norm vector
+    has no cosine: the pair-join formulation errors on it under the
+    default ANSI mode (DIVIDE_BY_ZERO), and the kernel fails as loudly
+    instead of turning it into a NULL.
 
     Precondition: the plan upstream of ``df`` must be deterministic or
     checkpointed. Each member is read twice, once per union side
@@ -280,17 +284,19 @@ def blocked_pair_max_cosine(
             )
         ida = a["_id"].to_numpy(dtype=np.int64)
         idb = b["_id"].to_numpy(dtype=np.int64)
-        Va = np.vstack(a["_v"].to_numpy()).astype(np.float64, copy=False)
-        Vb = Va if diag else np.vstack(b["_v"].to_numpy()).astype(
-            np.float64, copy=False
-        )
+        Va = _stack(a["_v"])
+        Vb = Va if diag else _stack(b["_v"])
         na = a["_n"].to_numpy(dtype=np.float64)
         nb = na if diag else b["_n"].to_numpy(dtype=np.float64)
+        if not (na.all() and nb.all()):
+            raise ValueError(
+                "blocked_pair_max_cosine requires non-zero norms "
+                "(a 0-norm vector has no cosine)"
+            )
         num = np.zeros((len(ida), len(idb)))
         for k in range(Va.shape[1]):  # ascending-k fold, exact dot order
             num = num + Va[:, k : k + 1] * Vb[:, k]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = num / (na[:, None] * nb[None, :])
+        cos = num / (na[:, None] * nb[None, :])
         if diag:
             keep = ida[:, None] < idb[None, :]
         else:
@@ -301,8 +307,6 @@ def blocked_pair_max_cosine(
         order = np.argsort(pidf, kind="stable")
         spid = pidf[order]
         starts = np.flatnonzero(np.r_[True, spid[1:] != spid[:-1]])
-        # fmax skips NaN (all-NaN group -> NaN -> NULL past Arrow):
-        # Spark's NULL-division + NULL-skipping max semantics.
         maxes = np.fmax.reduceat(cosf[order], starts)
         return pd.DataFrame(
             {c: pdf[c].iat[0], "pid": spid[starts], "max_cos": maxes}
@@ -379,14 +383,13 @@ def dot_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
     starting at 0.0, ascending j) applied column-by-column across the
     batch — every IEEE intermediate per row is identical, so any
     downstream arithmetic or threshold sees the same bits. Same
-    non-null fixed-dim precondition as the Lloyd kernels (np.vstack
-    raises on null/ragged input — the callers' pair stages feed dense
-    checkpointed vectors). Used where per-pair interpreted lambdas
-    dominate (the SemDeDup pair censuses fold ~1M pairs)."""
+    non-null fixed-dim precondition as every vector kernel
+    (``_stack``). Used where per-pair interpreted lambdas dominate (the
+    SemDeDup pair censuses fold ~1M pairs)."""
     if len(a) == 0:
         return pd.Series(dtype="float64")
-    av = np.vstack(a.to_numpy()).astype(np.float64, copy=False)
-    bv = np.vstack(b.to_numpy()).astype(np.float64, copy=False)
+    av = _stack(a)
+    bv = _stack(b)
     acc = np.zeros(av.shape[0])
     for j in range(av.shape[1]):
         acc = acc + av[:, j] * bv[:, j]
@@ -409,8 +412,8 @@ def cosine_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
             acc = acc + mat[:, j]
         return acc
 
-    av = np.vstack(a.to_numpy()).astype(np.float64)
-    bv = np.vstack(b.to_numpy()).astype(np.float64)
+    av = _stack(a)
+    bv = _stack(b)
     num = fold(av * bv)
     denom = np.sqrt(fold(av * av)) * np.sqrt(fold(bv * bv))
     with np.errstate(divide="ignore", invalid="ignore"):

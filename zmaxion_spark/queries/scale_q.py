@@ -18,13 +18,12 @@ round 1), never runtime RNG.
 
 from __future__ import annotations
 
-import os
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from zmaxion_spark.catalog import fixture_cache_dir, load_table
+from zmaxion_spark.catalog import cache_built, fixture_cache_dir, load_table
 from zmaxion_spark.queries.helpers import DEC, sql_dsum
 from zmaxion_spark.queries.registry import query
 
@@ -242,7 +241,7 @@ def zorder_value(x: Column, y: Column, bits: int = 16) -> Column:
 )
 def q_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = fixture_cache_dir(sf_dir, "lineitem", "zorder")
-    if not os.path.isdir(path):
+    if not cache_built(path):
         li = load_table(spark, sf_dir, "lineitem")
         z = zorder_value(
             (F.col("l_partkey") % 65536).cast("long"),

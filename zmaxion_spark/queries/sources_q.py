@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from zmaxion_spark.catalog import fixture_cache_dir, load_table
+from zmaxion_spark.catalog import cache_built, fixture_cache_dir, load_table
 from zmaxion_spark.queries.helpers import sql_dsum
 from zmaxion_spark.queries.registry import query
 
@@ -52,7 +52,7 @@ ORDERS_LITE_SCHEMA = T.StructType(
 )
 def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = fixture_cache_dir(sf_dir, "nation", "nation_csv")
-    if not os.path.exists(path):
+    if not cache_built(path):
         load_table(spark, sf_dir, "nation").coalesce(1).write.mode("overwrite").option(
             "header", True
         ).csv(path)
@@ -81,7 +81,7 @@ def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = fixture_cache_dir(sf_dir, "orders", "orders_json")
-    if not os.path.exists(path):
+    if not cache_built(path):
         load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         ).coalesce(1).write.mode("overwrite").json(path)
@@ -112,7 +112,7 @@ def q_scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = fixture_cache_dir(sf_dir, "documents", "documents_by_lang")
-    if not os.path.exists(path):
+    if not cache_built(path):
         load_table(spark, sf_dir, "documents").write.mode(
             "overwrite"
         ).partitionBy("lang").parquet(path)
@@ -155,7 +155,7 @@ LINEITEM_LITE_SCHEMA = T.StructType(
 )
 def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = fixture_cache_dir(sf_dir, "lineitem", "lineitem_orc")
-    if not os.path.exists(path):
+    if not cache_built(path):
         load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice"
         ).coalesce(2).write.mode("overwrite").orc(path)
@@ -195,7 +195,7 @@ def q_compact_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zmaxion_spark.layout import compact
 
     path = fixture_cache_dir(sf_dir, "orders", "orders_small_files")
-    if not os.path.exists(path):
+    if not cache_built(path):
         load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus"
         ).repartition(64).write.mode("overwrite").parquet(path)

@@ -194,12 +194,12 @@ def events_ingest_table(spark: SparkSession, sf_dir: str) -> TxTable:
 
     root = fixture_cache_dir(sf_dir, "events", "events_tx")
     t = TxTable(root)
-    if t._applied_batches(_INGEST_SOURCE) != _N_CHUNKS - 1:
+    if t.applied_batches(_INGEST_SOURCE) != _N_CHUNKS - 1:
         import shutil
 
         shutil.rmtree(root, ignore_errors=True)
         t = TxTable(root)
-    if t._applied_batches(_INGEST_SOURCE) == _N_CHUNKS - 1:
+    if t.applied_batches(_INGEST_SOURCE) == _N_CHUNKS - 1:
         return t
     schema = T.StructType(
         [
@@ -632,7 +632,7 @@ def _silver_table(spark: SparkSession, sf_dir: str) -> TxTable:
     bronze = events_ingest_table(spark, sf_dir)
     root = fixture_cache_dir(sf_dir, "events", "events_silver")
     silver = TxTable(root)
-    if silver._applied_batches("silver") >= 0:
+    if silver.applied_batches("silver") >= 0:
         return silver  # the availableNow drain is a single batch
     sdf = stream_txlog(spark, bronze.path).filter(F.col("value") > 100.0)
     run_foreach_batch(

@@ -8,9 +8,10 @@ sources, re-expressed through Spark 4's Python DataSource API:
 
 - **Offsets** are ``{"version": N}`` — the committed log head.
 - **A micro-batch** is the half-open version range (start, end]; its
-  input partitions are the data files ADDED by those commits with
-  ``dataChange != false`` — compaction commits are invisible to the
-  stream (#183's guarantee, now streaming).
+  input partitions are ``TxTable.added_files(start, end)`` — the data
+  files those commits logically added, so compaction commits are
+  invisible to the stream (#183's guarantee, now streaming). The log's
+  record layout stays private to ``txlog``.
 - **Replay** is exact: the same version range always resolves the
   same immutable files (vacuum permitting), so checkpoint recovery
   re-reads identical bytes.
@@ -55,18 +56,9 @@ class _TxLogStreamReader(DataSourceStreamReader):
         return {"version": self._table().latest_version()}
 
     def partitions(self, start: dict, end: dict):
-        import os
-
-        t = self._table()
-        parts = []
-        for v in t.versions():
-            if not (start["version"] < v <= end["version"]):
-                continue
-            for a in t._read_record(v)["actions"]:
-                if "add" in a and a.get("dataChange", True):
-                    parts.append(_FilePartition(os.path.join(t.path, a["add"])))
+        paths = self._table().added_files(start["version"], end["version"])
         # An empty range still needs one no-op partition (API contract).
-        return parts or [_FilePartition("")]
+        return [_FilePartition(p) for p in paths] or [_FilePartition("")]
 
     def read(self, part: _FilePartition):
         if not part.abs_path:

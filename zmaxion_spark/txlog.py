@@ -14,7 +14,11 @@ JSON, with zero non-public dependencies:
 - **Atomic commits**: a version file is created with O_CREAT|O_EXCL —
   the filesystem arbitrates concurrent writers; the loser gets
   ``CommitConflict`` and retries on top of the new head (optimistic
-  concurrency, exactly Delta's protocol shape).
+  concurrency, exactly Delta's protocol shape). Every writer commits
+  through ``commit_retry`` under one conflict rule: a commit that
+  landed after the writer's snapshot conflicts if it removed a file
+  the writer read, or attached a deletion vector to a file the writer
+  removes. All else commutes (appends, concurrent deletes).
 - **Snapshot isolation**: a read resolves the live file set at one
   version and never sees a half-commit (a data file is visible only
   after its log record exists; orphaned staging files are invisible).
@@ -30,8 +34,9 @@ JSON, with zero non-public dependencies:
 Scale notes: the log is O(commits) small JSON files and the stats are
 footer metadata only, so planning cost is independent of data volume;
 the data path is stock parquet scans with all Catalyst pushdown
-intact. At real scale the log would be checkpointed (periodic
-manifest snapshot) — noted, not needed at test commit counts.
+intact. ``write_checkpoint`` snapshots the live set so replay is
+O(commits since the checkpoint). Only this module knows the record
+layout; others read the log through ``live_files``/``added_files``.
 """
 
 from __future__ import annotations
@@ -39,7 +44,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 
 import pyarrow.parquet as pq
 
@@ -50,7 +55,8 @@ class CommitConflict(Exception):
 
 class ConcurrentModification(Exception):
     """A competing commit invalidated this transaction's snapshot
-    (removed a file it read) — the transaction must restart."""
+    (removed a file it read, or attached a deletion vector to a file it
+    removes) — the transaction must restart."""
 
 
 class QualityGateFailure(Exception):
@@ -66,6 +72,14 @@ class FileEntry:
     dv: list[int] = field(default_factory=list)  # deleted row indices
     bloom: dict[str, list] = field(default_factory=dict)  # col -> set bits
     partition: dict[str, object] = field(default_factory=dict)  # col -> value
+
+
+def _add_action(f: FileEntry, path: str | None = None) -> dict:
+    """The add action that publishes ``f`` (at ``path``, default its
+    own). Its DV travels in a ``dv`` action; a checkpoint entry is
+    ``asdict(f)`` and reads back as ``FileEntry(**e)``."""
+    extra = {k: v for k, v in (("bloom", f.bloom), ("partition", f.partition)) if v}
+    return {"add": path or f.path, "rows": f.rows, "stats": f.stats, **extra}
 
 
 # Bloom geometry (#188): m bits, k md5-derived hash functions per key.
@@ -154,9 +168,16 @@ class TxTable:
             )
         return version
 
-    def _read_record(self, version: int) -> dict:
-        with open(os.path.join(self._log_dir, f"{version:08d}.json")) as f:
-            return json.load(f)
+    def _records(self, after: int = -1, upto: int | None = None):
+        """Yield ``(version, record)`` for every commit in (after, upto]
+        (default: through head), in version order."""
+        for v in self.versions():
+            if v <= after:
+                continue
+            if upto is not None and v > upto:
+                break
+            with open(os.path.join(self._log_dir, f"{v:08d}.json")) as f:
+                yield v, json.load(f)
 
     # -- log checkpoints (#190): O(1) planning on long logs ----------------
 
@@ -167,20 +188,9 @@ class TxTable:
         checkpointed version. Idempotent per version; crash-safe (a
         half-written checkpoint is ignored until its rename lands)."""
         head = self.latest_version()
-        live = self.live_files(version=head)
         payload = {
             "version": head,
-            "live": [
-                {
-                    "path": f.path,
-                    "rows": f.rows,
-                    "stats": f.stats,
-                    "dv": f.dv,
-                    "bloom": f.bloom,
-                    "partition": f.partition,
-                }
-                for f in live
-            ],
+            "live": [asdict(f) for f in self.live_files(version=head)],
         }
         target = os.path.join(self._log_dir, f"chk-{head:08d}.json")
         tmp = f"{target}.tmp-{os.getpid()}"
@@ -190,12 +200,12 @@ class TxTable:
         return head
 
     def _latest_checkpoint(self, head: int) -> dict | None:
-        best = None
-        for name in os.listdir(self._log_dir):
-            if name.startswith("chk-") and name.endswith(".json"):
-                v = int(name[4:-5])
-                if v <= head and (best is None or v > best):
-                    best = v
+        chks = [
+            int(name[4:-5])
+            for name in os.listdir(self._log_dir)
+            if name.startswith("chk-") and name.endswith(".json")
+        ]
+        best = max((v for v in chks if v <= head), default=None)
         if best is None:
             return None
         with open(os.path.join(self._log_dir, f"chk-{best:08d}.json")) as f:
@@ -210,29 +220,40 @@ class TxTable:
         snapshot_version: int | None = None,
         max_retries: int = 5,
         meta: dict | None = None,
-    ) -> int:
-        """Commit with Delta-shaped optimistic concurrency.
-        ``snapshot_version`` is the head this transaction READ its
-        inputs at (default: now). Before every commit attempt, all
-        commits unseen at snapshot time are validated: if any REMOVED a
-        file in ``read_files``, the snapshot is stale in a way the
-        write cannot survive → ConcurrentModification (re-derive and
-        retry at the new snapshot). Commits that only added files
-        commute with us (appends always do), so a lost version race
-        just retries on the new head."""
+    ) -> int | None:
+        """Commit with Delta-shaped optimistic concurrency — the one
+        commit path every writer takes. ``snapshot_version`` is the head
+        this transaction READ its inputs at (default: now). Before every
+        commit attempt, each commit unseen at snapshot time is validated
+        against the one conflict rule: if it REMOVED a file in
+        ``read_files``, or attached a deletion vector to a file these
+        ``actions`` remove, the write cannot survive →
+        ConcurrentModification (re-derive and retry at the new
+        snapshot). Anything else commutes (appends, deletion vectors on
+        files nobody removes), so a lost version race just retries on
+        the new head. With a ``txn`` marker in ``meta`` (append_batch),
+        an unseen commit that already applied this batch makes the
+        commit a no-op: returns None."""
+        removes = {a["remove"] for a in actions if "remove" in a}
+        txn = (meta or {}).get("txn")
         checked = (
             self.latest_version() if snapshot_version is None else snapshot_version
         )
         for _ in range(max_retries + 1):
-            head = self.latest_version()
-            for v in range(checked + 1, head + 1):
-                for a in self._read_record(v)["actions"]:
-                    if "remove" in a and a["remove"] in read_files:
+            for v, rec in self._records(after=checked):
+                seen = rec.get("txn", {})
+                if txn and seen.get("source") == txn["source"] and (
+                    seen["batchId"] >= txn["batchId"]
+                ):
+                    return None
+                for a in rec["actions"]:
+                    if a.get("remove") in read_files or a.get("dv") in removes:
                         raise ConcurrentModification(
-                            f"commit v{v} removed {a['remove']} which "
-                            "this transaction read"
+                            f"commit v{v} removed or deleted rows of "
+                            f"{a.get('remove') or a['dv']}, which this "
+                            "transaction read or removes"
                         )
-            checked = head
+                checked = v
             try:
                 return self._commit(actions, meta)
             except CommitConflict:
@@ -243,7 +264,8 @@ class TxTable:
 
     def _stage(self, df, n_files: int | None, range_col: str | None) -> list[dict]:
         """Write df's data as new parquet files under data/ and return
-        their add-actions (not yet committed, hence invisible)."""
+        their add-actions, with bloom indexes for ``bloom_cols`` (not
+        yet committed, hence invisible)."""
         tmp = os.path.join(self.path, f"_staging-{uuid.uuid4().hex[:12]}")
         if range_col is not None and n_files:
             df = df.repartitionByRange(n_files, range_col)
@@ -263,6 +285,8 @@ class TxTable:
         for leftover in os.listdir(tmp):
             os.remove(os.path.join(tmp, leftover))
         os.rmdir(tmp)
+        if self.bloom_cols:
+            self._bloom_for_files(df.sparkSession, adds)
         return adds
 
     def _bloom_for_files(self, spark, adds: list[dict]) -> None:
@@ -341,8 +365,6 @@ class TxTable:
                     f"commit aborted, failed constraints: {failed}"
                 )
         adds = self._stage(df, n_files, range_col)
-        if self.bloom_cols:
-            self._bloom_for_files(df.sparkSession, adds)
         # Appends read nothing, so they commute with any concurrent
         # commit — retry through version races (#191).
         return self.commit_retry(adds)
@@ -356,18 +378,7 @@ class TxTable:
         and drops the vectors. GDPR-eraser / dedup-killer shape: a
         100 TB table deletes a few million rows in seconds, paying
         rewrite cost only when maintenance chooses to."""
-        from pyspark.sql import functions as F
-
-        live = self.live_files()
-        df = spark.read.parquet(
-            *[os.path.join(self.path, f.path) for f in live]
-        )
-        return self._dv_commit(
-            df.filter(predicate).select(
-                F.col("_metadata.file_path").alias("fp"),
-                F.col("_metadata.row_index").alias("ri"),
-            )
-        )
+        return self._dv_commit(spark, lambda rows: rows.filter(predicate))
 
     def delete_matching(self, spark, keys_df, key_col: str) -> int:
         """DataFrame-native DELETE: drop every row whose ``key_col``
@@ -375,49 +386,51 @@ class TxTable:
         Same deletion-vector commit as :meth:`delete_where`, but the
         match is a distributed LEFT SEMI join — the doomed-key set
         never passes through the driver, so "delete these N million
-        keys" scales where an ``isin([...])`` predicate list cannot.
-        The ``_metadata`` pseudo-column is projected off the scan
-        BEFORE the join (it only resolves against the file source)."""
-        from pyspark.sql import functions as F
-
-        live = self.live_files()
-        df = spark.read.parquet(
-            *[os.path.join(self.path, f.path) for f in live]
-        )
-        tagged = df.select(
-            key_col,
-            F.col("_metadata.file_path").alias("fp"),
-            F.col("_metadata.row_index").alias("ri"),
-        )
+        keys" scales where an ``isin([...])`` predicate list cannot."""
         keys = keys_df.select(key_col).distinct()
         return self._dv_commit(
-            tagged.join(keys, key_col, "left_semi").select("fp", "ri")
+            spark, lambda rows: rows.join(keys, key_col, "left_semi")
         )
 
-    def _dv_commit(self, matched) -> int:
-        """Commit deletion vectors for matched rows, given as a frame
-        of (fp = _metadata.file_path, ri = _metadata.row_index): group
-        per file and record one DV action per affected file. Only the
-        per-file index LISTS reach the driver — O(deleted rows) ints,
-        the same payload the commit JSON itself must hold."""
+    def _dv_commit(self, spark, match) -> int:
+        """Commit deletion vectors for the rows ``match`` keeps of the
+        live snapshot's scan: group the matched (file, row index) pairs
+        per file and record one DV action per affected file. The
+        ``_metadata`` pseudo-column is projected off the scan BEFORE
+        ``match`` (it only resolves against the file source, not across
+        a join). Only the per-file index LISTS are collected —
+        O(deleted rows) ints, the same payload the commit JSON itself
+        must hold."""
         from pyspark.sql import functions as F
 
+        head = self.latest_version()
+        live = self.live_files(head)
+        rows = spark.read.parquet(
+            *[os.path.join(self.path, f.path) for f in live]
+        ).select(
+            "*",
+            F.col("_metadata.file_path").alias("_zmx_fp"),
+            F.col("_metadata.row_index").alias("_zmx_ri"),
+        )
         hits = (
-            matched.groupBy("fp")
-            .agg(F.sort_array(F.collect_list("ri")).alias("rows"))
+            match(rows)
+            .groupBy("_zmx_fp")
+            .agg(F.sort_array(F.collect_list("_zmx_ri")).alias("rows"))
             .collect()
         )
         prefix = "file:" + self.path + "/"
         actions = [
             {
-                "dv": row["fp"].removeprefix(prefix),
+                "dv": row["_zmx_fp"].removeprefix(prefix),
                 "drop_rows": [int(r) for r in row["rows"]],
             }
             for row in hits
         ]
         if not actions:
             raise ValueError("delete matched no rows")
-        return self._commit(actions)
+        return self.commit_retry(
+            actions, read_files={f.path for f in live}, snapshot_version=head
+        )
 
     def append_batch(self, df, source: str, batch_id: int) -> int | None:
         """Exactly-once streaming ingestion: commit one micro-batch,
@@ -427,43 +440,41 @@ class TxTable:
         the log and skipped — the streaming txn pattern Delta's
         ``txnAppId``/``txnVersion`` standardized. Returns the committed
         version, or None when the batch was already applied."""
-        applied = self._applied_batches(source)
-        if batch_id <= applied:
+        head = self.latest_version()
+        if batch_id <= self.applied_batches(source):
             return None
-        adds = self._stage(df, None, None)
-        try:
-            return self._commit(
-                adds, meta={"txn": {"source": source, "batchId": batch_id}}
-            )
-        except CommitConflict:
-            # Concurrent commit advanced the head; re-check idempotence
-            # then retry once on the new head.
-            if batch_id <= self._applied_batches(source):
-                return None
-            return self._commit(
-                adds, meta={"txn": {"source": source, "batchId": batch_id}}
-            )
+        return self.commit_retry(
+            self._stage(df, None, None),
+            snapshot_version=head,
+            meta={"txn": {"source": source, "batchId": batch_id}},
+        )
 
-    def _applied_batches(self, source: str) -> int:
+    def applied_batches(self, source: str) -> int:
         """Highest batch_id already committed for ``source`` (-1 if
         none). Batches commit in order per source, so one high-water
         mark is the full idempotence state."""
-        hi = -1
-        for v in self.versions():
-            txn = self._read_record(v).get("txn")
-            if txn and txn.get("source") == source:
-                hi = max(hi, txn["batchId"])
-        return hi
+        return max(
+            (
+                rec["txn"]["batchId"]
+                for _, rec in self._records()
+                if rec.get("txn", {}).get("source") == source
+            ),
+            default=-1,
+        )
 
     def vacuum(self, retain_from_version: int) -> list[str]:
         """Physically delete data files not live at ANY version >=
-        ``retain_from_version`` (the retention horizon). Time travel
+        ``retain_from_version`` (the retention horizon): everything but
+        the horizon's live set and the files added after it. Time travel
         before the horizon stops resolving — the documented trade for
         reclaiming storage. Returns deleted paths."""
-        protected: set[str] = set()
-        for v in self.versions():
-            if v >= retain_from_version:
-                protected |= {f.path for f in self.live_files(version=v)}
+        protected = {f.path for f in self.live_files(version=retain_from_version)}
+        protected |= {
+            a["add"]
+            for _, rec in self._records(after=retain_from_version)
+            for a in rec["actions"]
+            if "add" in a
+        }
         deleted = []
         data_dir = os.path.join(self.path, "data")
         for name in sorted(os.listdir(data_dir)):
@@ -525,53 +536,70 @@ class TxTable:
             raise ValueError(
                 f"replace_where df contains rows outside {part_col} in {values}"
             )
-        removes = [
-            {"remove": f.path}
-            for f in self.live_files()
+        head = self.latest_version()
+        doomed = {
+            f.path
+            for f in self.live_files(head)
             if f.partition.get(part_col) in values
-        ]
+        }
         adds = self._stage_partitioned(df, part_col, files_per_part)
-        return self._commit(adds + removes)
+        return self._swap(adds, doomed, head)
 
     def overwrite(self, df, n_files: int | None = None) -> int:
         """Replace the whole table in one atomic commit."""
-        removes = [{"remove": f.path} for f in self.live_files()]
-        return self._commit(self._stage(df, n_files, None) + removes)
+        head = self.latest_version()
+        doomed = {f.path for f in self.live_files(head)}
+        return self._swap(self._stage(df, n_files, None), doomed, head)
+
+    def _swap(
+        self, adds: list[dict], doomed: set[str], head: int, meta=None, **marks
+    ) -> int:
+        """Commit ``adds`` and the removal of ``doomed`` (files live at
+        ``head``, which this transaction read) as one commit. ``marks``
+        (``dataChange``) tag every action."""
+        removes = [{"remove": p} for p in sorted(doomed)]
+        return self.commit_retry(
+            [dict(a, **marks) for a in adds + removes],
+            read_files=doomed,
+            snapshot_version=head,
+            meta=meta,
+        )
 
     def compact(self, spark, n_files: int = 1) -> int:
         """Rewrite the current live set into ``n_files`` files — a pure
         layout change in one commit; every snapshot still resolves.
-        The commit's actions carry ``dataChange: false`` so change-feed
-        readers (#183) know no rows were logically added or removed.
         Deletion vectors (#189) are MATERIALIZED here — the rewrite
         reads through them, so the new files carry no vectors."""
-        live = self.live_files()
-        df = self.read(spark)
-        adds = [dict(a, dataChange=False) for a in self._stage(df, n_files, None)]
-        if self.bloom_cols:
-            self._bloom_for_files(spark, adds)
-        removes = [{"remove": f.path, "dataChange": False} for f in live]
-        return self._commit(adds + removes)
+        return self._rewrite(spark, n_files)
 
     def cluster(self, spark, cluster_expr, n_files: int = 8) -> int:
         """Re-cluster the live set by an expression (e.g. a Z-order
-        interleave): range-partition + sort the data on it, commit as
-        ``dataChange: false`` (a layout commit, invisible to change
-        feeds and streams). After clustering, per-file min/max stats on
-        the expression's source columns become tight, so manifest
-        pruning (#177) works on every dimension the expression mixes.
-        Like compact, deletion vectors materialize in the rewrite."""
-        live = self.live_files()
-        df = self.read(spark)
-        clustered = (
-            df.withColumn("_zmx_cluster", cluster_expr)
+        interleave): range-partition + sort the data on it. After
+        clustering, per-file min/max stats on the expression's source
+        columns become tight, so manifest pruning (#177) works on every
+        dimension the expression mixes. Like compact, deletion vectors
+        materialize in the rewrite."""
+        return self._rewrite(
+            spark,
+            None,
+            lambda df: df.withColumn("_zmx_cluster", cluster_expr)
             .repartitionByRange(n_files, "_zmx_cluster")
             .sortWithinPartitions("_zmx_cluster")
-            .drop("_zmx_cluster")
+            .drop("_zmx_cluster"),
         )
-        adds = [dict(a, dataChange=False) for a in self._stage(clustered, None, None)]
-        removes = [{"remove": f.path, "dataChange": False} for f in live]
-        return self._commit(adds + removes)
+
+    def _rewrite(self, spark, n_files: int | None, layout=None) -> int:
+        """The layout commit shared by compact and cluster: read the
+        head snapshot (through its deletion vectors), reshape it with
+        ``layout``, stage it into ``n_files`` files with bloom indexes,
+        and swap it for the old live set. Every action carries
+        ``dataChange: false`` so change feeds (#183) and streams know
+        no rows were logically added or removed."""
+        head = self.latest_version()
+        doomed = {f.path for f in self.live_files(head)}
+        df = self.read(spark, version=head)
+        adds = self._stage(layout(df) if layout else df, n_files, None)
+        return self._swap(adds, doomed, head, dataChange=False)
 
     def clone(self, dest_path: str, version: int | None = None) -> "TxTable":
         """Zero-copy SHALLOW CLONE (#196): the clone starts with one
@@ -581,30 +609,18 @@ class TxTable:
         shallow clone — same documented trade as Delta's.)"""
         files = self.live_files(version)
         t = TxTable(dest_path, stat_cols=self.stat_cols, bloom_cols=self.bloom_cols)
-        t._commit(
-            [
-                {
-                    "add": os.path.relpath(
-                        os.path.join(self.path, f.path), dest_path
-                    ),
-                    "rows": f.rows,
-                    "stats": f.stats,
-                    **({"bloom": f.bloom} if f.bloom else {}),
-                    **({"partition": f.partition} if f.partition else {}),
-                }
-                for f in files
-            ],
+
+        def rel(f: FileEntry) -> str:
+            return os.path.relpath(os.path.join(self.path, f.path), dest_path)
+
+        t.commit_retry(
+            [_add_action(f, rel(f)) for f in files],
             meta={"clone_of": self.path, "clone_version": version},
         )
         # carry source deletion vectors into the clone's view
-        dv_actions = [
-            {"dv": os.path.relpath(os.path.join(self.path, f.path), dest_path),
-             "drop_rows": f.dv}
-            for f in files
-            if f.dv
-        ]
+        dv_actions = [{"dv": rel(f), "drop_rows": f.dv} for f in files if f.dv]
         if dv_actions:
-            t._commit(dv_actions)
+            t.commit_retry(dv_actions)
         return t
 
     def restore(self, spark, version: int) -> int:
@@ -614,22 +630,14 @@ class TxTable:
         be time-traveled past or restored again. The operational undo
         button: a bad MERGE on a 100 TB table reverts in one metadata
         commit."""
+        head = self.latest_version()
         target = {f.path: f for f in self.live_files(version)}
-        current = {f.path: f for f in self.live_files()}
-        actions: list[dict] = []
-        for path, f in target.items():
-            if path not in current:
-                actions.append(
-                    {"add": path, "rows": f.rows, "stats": f.stats,
-                     **({"bloom": f.bloom} if f.bloom else {}),
-                     **({"partition": f.partition} if f.partition else {})}
-                )
-        for path in current:
-            if path not in target:
-                actions.append({"remove": path})
-        if not actions:
+        current = {f.path for f in self.live_files(head)}
+        adds = [_add_action(f) for p, f in target.items() if p not in current]
+        doomed = current - target.keys()
+        if not (adds or doomed):
             raise ValueError(f"already at version {version}'s file set")
-        return self._commit(actions, meta={"restore_of": version})
+        return self._swap(adds, doomed, head, meta={"restore_of": version})
 
     def metadata_count(self, version: int | None = None) -> int:
         """COUNT(*) answered from the manifest alone (#198): sum of
@@ -651,21 +659,25 @@ class TxTable:
             raise ValueError("deletion vectors present: min/max must scan")
         return min(s[0] for s in stats), max(s[1] for s in stats)
 
+    def added_files(self, since: int, until: int | None = None) -> list[str]:
+        """Absolute paths of the data files logically ADDED by commits
+        in (since, until] (default: through head): adds whose actions
+        carry dataChange != false. Compaction and clustering rewrite
+        bytes but add no rows, so their adds are excluded."""
+        return [
+            os.path.join(self.path, a["add"])
+            for _, rec in self._records(after=since, upto=until)
+            for a in rec["actions"]
+            if "add" in a and a.get("dataChange", True)
+        ]
+
     def read_changes(self, spark, since_version: int):
         """Change data feed (#183): the rows logically ADDED after
-        ``since_version`` — the union of data files added by commits in
-        (since_version, head] whose actions carry dataChange != false.
-        Compaction commits rewrite bytes but add no rows; including
-        them would double-count, so they are excluded by their marker.
-        (Append-only history here; remove-side change rows would need
-        the removed files replayed with a _change_type column.)"""
-        paths = []
-        for v in self.versions():
-            if v <= since_version:
-                continue
-            for a in self._read_record(v)["actions"]:
-                if "add" in a and a.get("dataChange", True):
-                    paths.append(os.path.join(self.path, a["add"]))
+        ``since_version`` — the union of :meth:`added_files`; including
+        layout commits would double-count. (Append-only history here;
+        remove-side change rows would need the removed files replayed
+        with a _change_type column.)"""
+        paths = self.added_files(since_version)
         if not paths:
             raise ValueError(f"no data-changing commits after v{since_version}")
         return spark.read.parquet(*paths)
@@ -677,30 +689,14 @@ class TxTable:
         seeded from the newest checkpoint manifest at or before it, so
         replay work is O(commits since checkpoint)."""
         head = self.latest_version() if version is None else version
-        live: dict[str, FileEntry] = {}
         chk = self._latest_checkpoint(head)
-        chk_v = -1
-        if chk is not None:
-            chk_v = chk["version"]
-            for e in chk["live"]:
-                live[e["path"]] = FileEntry(
-                    e["path"], e["rows"], e["stats"],
-                    dv=e.get("dv", []), bloom=e.get("bloom", {}),
-                    partition=e.get("partition", {}),
-                )
-        for v in self.versions():
-            if v <= chk_v:
-                continue
-            if v > head:
-                break
-            with open(os.path.join(self._log_dir, f"{v:08d}.json")) as f:
-                rec = json.load(f)
+        live = {e["path"]: FileEntry(**e) for e in chk["live"]} if chk else {}
+        for _, rec in self._records(after=chk["version"] if chk else -1, upto=head):
             for a in rec["actions"]:
                 if "add" in a:
                     live[a["add"]] = FileEntry(
                         a["add"], a["rows"], a["stats"],
-                        bloom=a.get("bloom", {}),
-                        partition=a.get("partition", {}),
+                        bloom=a.get("bloom", {}), partition=a.get("partition", {}),
                     )
                 elif "remove" in a:
                     live.pop(a["remove"], None)
