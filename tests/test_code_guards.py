@@ -1,12 +1,13 @@
 """Source guards: ``zmaxion_spark.catalog`` is the one owner of the
-fixture layout and of fixture-derived cache keys, and
+fixture layout and of fixture-derived cache keys,
 ``zmaxion_spark.txlog`` the one owner of the transaction log's record
-layout and commit rule. These checks parse the package with ``ast`` and
-fail if a copy of any of those decisions comes back elsewhere: a
-per-module table loader alias, a hard-coded ``/tmp/`` path, a
-hand-rolled stat-based cache key, a spelled-out
-``{sf_dir}/<table>.parquet`` path, or a log record read or raw commit
-outside ``txlog.py``."""
+layout and commit rule, and ``zmaxion_spark.streaming.pipeline`` the
+one place that starts a bounded (availableNow) stream run. These checks
+parse the package with ``ast`` and fail if a copy of any of those
+decisions comes back elsewhere: a per-module table loader alias, a
+hard-coded ``/tmp/`` path, a hand-rolled stat-based cache key, a
+spelled-out ``{sf_dir}/<table>.parquet`` path, a log record read or raw
+commit outside ``txlog.py``, or a hand-built availableNow run."""
 
 from __future__ import annotations
 
@@ -18,6 +19,7 @@ import pytest
 PKG = Path(__file__).resolve().parent.parent / "zmaxion_spark"
 CATALOG = PKG / "catalog.py"
 TXLOG = PKG / "txlog.py"
+PIPELINE = PKG / "streaming" / "pipeline.py"
 SOURCES = sorted(PKG.rglob("*.py"))
 
 
@@ -137,3 +139,27 @@ def test_log_layout_known_only_to_txlog(trees):
     ]
     assert not hits, f"use TxTable.live_files/added_files/commit_retry: {hits}"
     assert any(_touches_log_layout(n) for n in ast.walk(trees[TXLOG]))
+
+
+def _starts_bounded_run(node: ast.AST) -> bool:
+    """An ``availableNow=`` keyword, a ``"checkpointLocation"`` option, or
+    an import of a private name of ``streaming.pipeline``."""
+    if isinstance(node, ast.keyword):
+        return node.arg == "availableNow"
+    if isinstance(node, ast.ImportFrom):
+        return node.module == "zmaxion_spark.streaming.pipeline" and any(
+            a.name.startswith("_") for a in node.names
+        )
+    return isinstance(node, ast.Constant) and node.value == "checkpointLocation"
+
+
+def test_bounded_runs_start_only_in_pipeline(trees):
+    hits = [
+        _where(p, n)
+        for p in SOURCES
+        if p != PIPELINE
+        for n in ast.walk(trees[p])
+        if _starts_bounded_run(n)
+    ]
+    assert not hits, f"use streaming.pipeline.run_stream or its run_* entry points: {hits}"
+    assert any(_starts_bounded_run(n) for n in ast.walk(trees[PIPELINE]))

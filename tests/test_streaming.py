@@ -11,7 +11,12 @@ import tempfile
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
-from zmaxion_spark.streaming.pipeline import Pipeline, run_foreach_batch, run_to_parquet
+from zmaxion_spark.streaming.pipeline import (
+    Pipeline,
+    run_available_now,
+    run_foreach_batch,
+    run_to_parquet,
+)
 from zmaxion_spark.streaming.sources import stream_events, stream_rate
 
 
@@ -369,3 +374,41 @@ def test_timeout_sessions_fire_on_silence_only_past_watermark(spark):
             # a timer-emitted final session must be past the horizon
             assert r.session_end_us <= horizon
     assert emitted_last >= 1  # the timer path genuinely fired
+
+
+def test_memory_sink_result_registers_no_table(spark):
+    """A run_available_now result is held by the returned DataFrame
+    only: two runs add no temporary view to the catalog, and both
+    results still collect their rows."""
+    before = {t.name for t in spark.catalog.listTables()}
+    ev = stream_events(spark, SF_SMOKE)
+    counts = run_available_now(
+        ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")),
+        "lifecycle_agg",
+        mode="complete",
+    )
+    errors = run_available_now(ev.filter(F.col("event_type") == "error"), "lifecycle_rows")
+    assert {t.name for t in spark.catalog.listTables()} == before
+    from zmaxion_spark.catalog import load_table
+
+    batch = load_table(spark, SF_SMOKE, "events")
+    per_type = batch.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    want = {r.event_type: r.n for r in per_type.collect()}
+    assert {r.event_type: r.n for r in counts.collect()} == want
+    assert len(errors.collect()) == want["error"]
+
+
+def test_checkpoint_lives_only_as_long_as_its_run(spark, tmp_path, monkeypatch):
+    """A checkpoint the caller does not pass is removed when the run
+    returns; one the caller passes is kept for a later resume."""
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    ev = stream_events(spark, SF_SMOKE).select("event_id")
+    seen: list[int] = []
+    run_foreach_batch(ev, lambda df, _bid: seen.append(df.count()))
+    run_to_parquet(ev, str(tmp_path / "out"))
+    assert sum(seen) == 1000
+    assert not [p.name for p in tmp_path.iterdir() if p.name.startswith("zmx-ckpt-")]
+    kept = tmp_path / "kept-ckpt"
+    run_to_parquet(ev, str(tmp_path / "out2"), checkpoint=str(kept))
+    assert (kept / "offsets").is_dir()

@@ -93,12 +93,22 @@ class World:
         reduced to anti-join + union, both co-located on the entity key.
         The result stays lazy: downstream queries see the updated
         component as a subplan, and Catalyst fuses it."""
+        self._components[component] = self._ticked(component, fn, with_, without)
+        return self
+
+    def _ticked(
+        self,
+        component: str,
+        fn: Callable[[DataFrame], DataFrame],
+        with_: tuple[str, ...],
+        without: tuple[str, ...],
+    ) -> DataFrame:
+        """``component`` after one system tick, not yet stored."""
         old = self._components[component]
         matched = self.query(component, *with_, without=without)
         updated = fn(matched).select(*old.columns)
         untouched = old.join(matched.select(ENTITY), ENTITY, "left_anti")
-        self._components[component] = untouched.unionByName(updated)
-        return self
+        return untouched.unionByName(updated)
 
     def save(self, root: str) -> dict[str, int]:
         """Persist the world: one transaction-logged table (#175) per
@@ -243,16 +253,14 @@ class Schedule:
         cluster prefer reliable `df.checkpoint()` so state survives
         executor loss."""
         for stage in self.stages():
-            # Snapshot: all systems in the stage read pre-stage state.
-            snapshot = {s.writes: world.component(s.writes) for s in stage}
-            updates: dict[str, DataFrame] = {}
-            for s in stage:
-                matched = world.query(s.writes, *s.with_, without=s.without)
-                updated = s.fn(matched).select(*snapshot[s.writes].columns)
-                untouched = snapshot[s.writes].join(
-                    matched.select(ENTITY), ENTITY, "left_anti"
-                )
-                updates[s.writes] = untouched.unionByName(updated)
+            # Stage-mates write different components (stages() puts two
+            # writers of one component in different stages) and the
+            # world changes only at stage end, so every system reads
+            # pre-stage state.
+            updates = {
+                s.writes: world._ticked(s.writes, s.fn, s.with_, s.without)
+                for s in stage
+            }
             for name, df in updates.items():
                 world._components[name] = (
                     df.localCheckpoint(eager=True) if checkpoint else df

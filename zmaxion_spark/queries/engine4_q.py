@@ -109,8 +109,8 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators=(57, 173),
     doc="State-store reader (#173, Spark 4 statestore data source): "
     "drain the event stream through a checkpointed streaming "
-    "aggregation (noop sink — state is the product), then read the "
-    "checkpoint's per-key aggregation buffers back as a batch "
+    "aggregation (its sink rows are discarded — state is the product), "
+    "then read the checkpoint's per-key aggregation buffers back as a batch "
     "DataFrame. After a full availableNow drain the state rows must "
     "equal the batch aggregate — exactly-once made auditable. This is "
     "the ECS 'query the live world state' surface: state is data, not "
@@ -119,7 +119,7 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     "inspection parallelism equals the stream's state parallelism.",
 )
 def q_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from zmaxion_spark.streaming.pipeline import _stream_shuffle
+    from zmaxion_spark.streaming.pipeline import run_available_now
     from zmaxion_spark.streaming.sources import stream_events
 
     ckpt = tempfile.mkdtemp(prefix="zmx-ckpt-statereader-")
@@ -131,15 +131,7 @@ def q_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast(DEC)).alias("total_value"),
         )
     )
-    with _stream_shuffle(spark):
-        q = (
-            agg.writeStream.format("noop")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_available_now(agg, "state_reader", mode="update", checkpoint=ckpt)
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.event_type").alias("event_type"),

@@ -505,47 +505,28 @@ def q_python_datasink(spark: SparkSession, sf_dir: str) -> DataFrame:
     "graded aggregate equals the plain batch aggregate of events.",
 )
 def q_stream_python_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from zmaxion_spark.queries.txlog_q import _events_chunks
-    from zmaxion_spark.streaming.pipeline import _checkpoint_dir
+    from zmaxion_spark.streaming.pipeline import run_stream
     from zmaxion_spark.streaming.pysink import (
         TopicSinkDataSource,
         committed_batch_ids,
         read_sink,
     )
+    from zmaxion_spark.streaming.sources import EVENT_CHUNKS, stream_event_chunks
 
     spark.dataSource.register(TopicSinkDataSource)
-    chunks = _events_chunks(spark, sf_dir)
     sink_dir = fixture_cache_dir(sf_dir, "events", "pysink_out")
-    n_chunks = len([f for f in os.listdir(chunks) if f.endswith(".parquet")])
-    if len(committed_batch_ids(sink_dir)) != n_chunks:
+    if len(committed_batch_ids(sink_dir)) != EVENT_CHUNKS:
         import shutil
 
         shutil.rmtree(sink_dir, ignore_errors=True)
         os.makedirs(sink_dir, exist_ok=True)
-        schema = T.StructType(
-            [
-                T.StructField("event_id", T.LongType()),
-                T.StructField("event_type", T.StringType()),
-                T.StructField("value", T.DoubleType()),
-            ]
-        )
-        sdf = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(chunks)
-        )
-        q = (
-            sdf.select(
+        run_stream(
+            stream_event_chunks(spark, sf_dir).select(
                 "event_type",
                 F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-            )
-            .writeStream.format("zmx_topic_sink")
-            .option("path", sink_dir)
-            .option("checkpointLocation", _checkpoint_dir())
-            .trigger(availableNow=True)
-            .start()
+            ),
+            lambda w: w.format("zmx_topic_sink").option("path", sink_dir),
         )
-        q.awaitTermination()
     back = read_sink(spark, sink_dir, "event_type string, cents bigint")
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

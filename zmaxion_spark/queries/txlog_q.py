@@ -24,8 +24,6 @@ format must be a transparent layer over the data:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -147,74 +145,31 @@ def q_txlog_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _INGEST_SOURCE = "events_ingest"
-_N_CHUNKS = 4
-
-
-def _events_chunks(spark: SparkSession, sf_dir: str) -> str:
-    """A cached ``_N_CHUNKS``-file copy of (event_id, event_type, value)
-    so the file stream delivers multiple micro-batches
-    (maxFilesPerTrigger=1). Keyed by the source fixture's identity;
-    built atomically (tmp dir + rename) so a concurrent builder can
-    never observe a partial chunk set."""
-    import shutil
-    import uuid
-
-    final = fixture_cache_dir(sf_dir, "events", "events_chunks")
-    if os.path.isdir(final) and len(
-        [f for f in os.listdir(final) if f.endswith(".parquet")]
-    ) == _N_CHUNKS:
-        return final
-    tmp = f"{final}-build-{uuid.uuid4().hex[:8]}"
-    (
-        load_table(spark, sf_dir, "events")
-        .select("event_id", "event_type", "value")
-        .repartition(_N_CHUNKS)
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
-    shutil.rmtree(final, ignore_errors=True)
-    try:
-        os.rename(tmp, final)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # concurrent builder won
-    return final
 
 
 def events_ingest_table(spark: SparkSession, sf_dir: str) -> TxTable:
-    """Replay the chunked events 'topic' into a logged table, one
+    """Replay the chunked events topic into a logged table, one
     atomic commit per micro-batch, (source, batchId)-idempotent.
 
     On a COMPLETE prior build this re-delivers every batch and
     append_batch skips each one — the graded path itself re-proves
     replay idempotence on every run after the first. An incomplete
-    build (fewer than {_N_CHUNKS} ingest commits) is wiped and redone."""
-    from pyspark.sql import types as T
-
+    build (fewer than EVENT_CHUNKS ingest commits) is wiped and redone."""
     from zmaxion_spark.streaming.pipeline import run_foreach_batch
+    from zmaxion_spark.streaming.sources import EVENT_CHUNKS, stream_event_chunks
 
     root = fixture_cache_dir(sf_dir, "events", "events_tx")
     t = TxTable(root)
-    if t.applied_batches(_INGEST_SOURCE) != _N_CHUNKS - 1:
+    if t.applied_batches(_INGEST_SOURCE) != EVENT_CHUNKS - 1:
         import shutil
 
         shutil.rmtree(root, ignore_errors=True)
         t = TxTable(root)
-    if t.applied_batches(_INGEST_SOURCE) == _N_CHUNKS - 1:
+    if t.applied_batches(_INGEST_SOURCE) == EVENT_CHUNKS - 1:
         return t
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_events_chunks(spark, sf_dir))
-    )
     run_foreach_batch(
-        sdf, lambda df, bid: t.append_batch(df, _INGEST_SOURCE, bid)
+        stream_event_chunks(spark, sf_dir),
+        lambda df, bid: t.append_batch(df, _INGEST_SOURCE, bid),
     )
     return t
 

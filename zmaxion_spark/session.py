@@ -53,13 +53,20 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _default_driver_mem() -> str:
+    """Half of physical memory, capped at 16g: the heap must leave room
+    for the JVM's off-heap use, the Python workers and the OS."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(16 * 1024, phys // 2**21)}m"
+
+
 def get_spark(app_name: str = "zmaxion-spark", cpus: int | str | None = None) -> SparkSession:
     """Create (or get) a local session with the engine's standard conf."""
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.driver.memory", os.environ.get("ZMX_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("ZMX_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.filterPushdown", "true")

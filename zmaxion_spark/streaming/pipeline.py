@@ -11,6 +11,19 @@ A thin fluent builder over a streaming DataFrame:
 Every stage is a stock Structured Streaming transformation; the
 builder adds nothing but ergonomics — Catalyst and the incremental
 planner do the work (SURVEY §4: zero custom rules).
+
+This module is the only one that starts a bounded (availableNow) run;
+``run_stream`` is that run, and ``run_available_now`` /
+``run_to_parquet`` / ``run_foreach_batch`` are its sink-specific entry
+points. The run contract:
+
+- A checkpoint the caller does not pass is a temporary directory that
+  is deleted when the run returns, whether it succeeded or failed.
+- Pass ``checkpoint=`` to RESUME: that directory belongs to the caller
+  and is kept, so the next run continues from its committed offsets
+  and state.
+- A memory-sink result (``run_available_now``) is not registered as a
+  table: its rows live exactly as long as the returned DataFrame.
 """
 
 from __future__ import annotations
@@ -23,12 +36,9 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 _QUERY_IDS = itertools.count()
-
-
-def _checkpoint_dir() -> str:
-    return tempfile.mkdtemp(prefix="zmx-ckpt-")
 
 
 @contextlib.contextmanager
@@ -61,6 +71,32 @@ def _stream_shuffle(spark: SparkSession):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def run_stream(
+    sdf: DataFrame,
+    sink: Callable[[DataStreamWriter], DataStreamWriter],
+    mode: str = "append",
+    checkpoint: str | None = None,
+) -> None:
+    """Drain a bounded replay of ``sdf`` through the writer ``sink``
+    configures (format, path, queryName, foreachBatch ...) under the
+    pinned state-store parallelism, then return once every available
+    offset is committed (#56 trigger_control, #57 checkpointing)."""
+    owned = (
+        tempfile.TemporaryDirectory(prefix="zmx-ckpt-")
+        if checkpoint is None
+        else contextlib.nullcontext(checkpoint)
+    )
+    with owned as ckpt, _stream_shuffle(sdf.sparkSession):
+        q = (
+            sink(sdf.writeStream)
+            .outputMode(mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+
 def run_available_now(
     sdf: DataFrame,
     name: str | None = None,
@@ -68,40 +104,21 @@ def run_available_now(
     checkpoint: str | None = None,
 ) -> DataFrame:
     """Drain a bounded replay of a stream into a memory sink and return
-    the materialized table (#6 sink_memory, #56 trigger_control,
-    #57 checkpointing)."""
+    the materialized table (#6 sink_memory)."""
+    spark = sdf.sparkSession
     qname = f"{name or 'zmx'}_{next(_QUERY_IDS)}"
-    with _stream_shuffle(sdf.sparkSession):
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode(mode)
-            .option("checkpointLocation", checkpoint or _checkpoint_dir())
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return sdf.sparkSession.table(qname)
+    try:
+        run_stream(sdf, lambda w: w.format("memory").queryName(qname), mode, checkpoint)
+        return spark.table(qname)
+    finally:
+        spark.catalog.dropTempView(qname)
 
 
 def run_to_parquet(
     sdf: DataFrame, path: str, mode: str = "append", checkpoint: str | None = None
 ) -> None:
-    """Exactly-once parquet sink with checkpointed offsets (#6).
-
-    Pass an explicit ``checkpoint`` to RESUME consumption across calls
-    — each availableNow run continues from the committed offsets, the
-    scheduled-batch-over-stream operating pattern."""
-    with _stream_shuffle(sdf.sparkSession):
-        q = (
-            sdf.writeStream.format("parquet")
-            .option("path", path)
-            .option("checkpointLocation", checkpoint or _checkpoint_dir())
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    """Exactly-once parquet sink with checkpointed offsets (#6)."""
+    run_stream(sdf, lambda w: w.format("parquet").option("path", path), mode, checkpoint)
 
 
 def run_foreach_batch(
@@ -110,19 +127,8 @@ def run_foreach_batch(
     mode: str = "append",
     checkpoint: str | None = None,
 ) -> None:
-    """Per-micro-batch escape hatch (#7): upserts, side outputs, audits.
-
-    Pass an explicit ``checkpoint`` to RESUME across calls — each
-    availableNow run continues from the committed offsets."""
-    with _stream_shuffle(sdf.sparkSession):
-        q = (
-            sdf.writeStream.foreachBatch(fn)
-            .outputMode(mode)
-            .option("checkpointLocation", checkpoint or _checkpoint_dir())
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    """Per-micro-batch escape hatch (#7): upserts, side outputs, audits."""
+    run_stream(sdf, lambda w: w.foreachBatch(fn), mode, checkpoint)
 
 
 class Pipeline:

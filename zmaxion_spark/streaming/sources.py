@@ -1,9 +1,11 @@
 """Streaming sources — SURVEY.md §2.1 #3–#5.
 
 ``stream_events`` replays the events fixture as an unbounded
-file-directory source (the stand-in for a topic). Schemas are always
-explicit (engine policy, SURVEY §1.3) — required by Spark streaming
-anyway. The explicit schema is taken from the fixture file's own
+file-directory source (the stand-in for a topic), and
+``stream_event_chunks`` replays three of its columns as
+``EVENT_CHUNKS`` micro-batches. Schemas are always explicit (engine
+policy, SURVEY §1.3) — required by Spark streaming anyway.
+``stream_events`` takes its schema from the fixture file's own
 footer (one cheap metadata read, cached per fixture file) so the stream
 sees exactly what the batch loader sees; ``ts`` is then normalized by
 the same ``catalog.normalize_events_ts`` rule, so stream/batch parity
@@ -13,6 +15,8 @@ holds to the microsecond across generator versions.
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,6 +25,7 @@ from pyspark.sql import types as T
 from zmaxion_spark.catalog import (
     fixture_cache_dir,
     fixture_stamp,
+    load_table,
     normalize_events_ts,
     table_path,
 )
@@ -92,6 +97,42 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(_as_stream_dir(sf_dir, "events"))
     )
     return normalize_events_ts(raw)
+
+
+# Files in the chunked events topic, so micro-batches per drain.
+EVENT_CHUNKS = 4
+
+
+def stream_event_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The chunked events topic: (event_id, event_type, value) replayed
+    one file per micro-batch (maxFilesPerTrigger=1), so a drain
+    delivers ``EVENT_CHUNKS`` batches with ids 0..EVENT_CHUNKS-1.
+
+    The ``EVENT_CHUNKS``-file copy is cached by the source fixture's
+    identity and built atomically (tmp dir + rename) so a concurrent
+    builder can never observe a partial chunk set."""
+    final = fixture_cache_dir(sf_dir, "events", "events_chunks")
+    if not os.path.isdir(final) or len(
+        [f for f in os.listdir(final) if f.endswith(".parquet")]
+    ) != EVENT_CHUNKS:
+        tmp = f"{final}-build-{uuid.uuid4().hex[:8]}"
+        (
+            load_table(spark, sf_dir, "events")
+            .select("event_id", "event_type", "value")
+            .repartition(EVENT_CHUNKS)
+            .write.mode("overwrite")
+            .parquet(tmp)
+        )
+        shutil.rmtree(final, ignore_errors=True)
+        try:
+            os.rename(tmp, final)
+        except OSError:
+            shutil.rmtree(tmp, ignore_errors=True)  # concurrent builder won
+    return (
+        spark.readStream.schema("event_id long, event_type string, value double")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(final)
+    )
 
 
 # The Kafka source's fixed wire schema (what `format("kafka").load()`
