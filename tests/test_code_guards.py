@@ -1,13 +1,15 @@
 """Source guards: ``zmaxion_spark.catalog`` is the one owner of the
 fixture layout and of fixture-derived cache keys,
 ``zmaxion_spark.txlog`` the one owner of the transaction log's record
-layout and commit rule, and ``zmaxion_spark.streaming.pipeline`` the
-one place that starts a bounded (availableNow) stream run. These checks
-parse the package with ``ast`` and fail if a copy of any of those
-decisions comes back elsewhere: a per-module table loader alias, a
-hard-coded ``/tmp/`` path, a hand-rolled stat-based cache key, a
-spelled-out ``{sf_dir}/<table>.parquet`` path, a log record read or raw
-commit outside ``txlog.py``, or a hand-built availableNow run."""
+layout and commit rule, ``zmaxion_spark.streaming.pipeline`` the
+one place that starts a bounded (availableNow) stream run, and
+``zmaxion_spark.session`` the one place that puts a session conf back.
+These checks parse the package with ``ast`` and fail if a copy of any
+of those decisions comes back elsewhere: a per-module table loader
+alias, a hard-coded ``/tmp/`` path, a hand-rolled stat-based cache key,
+a spelled-out ``{sf_dir}/<table>.parquet`` path, a log record read or
+raw commit outside ``txlog.py``, a hand-built availableNow run, or a
+hand-written conf save/set/restore block."""
 
 from __future__ import annotations
 
@@ -20,6 +22,7 @@ PKG = Path(__file__).resolve().parent.parent / "zmaxion_spark"
 CATALOG = PKG / "catalog.py"
 TXLOG = PKG / "txlog.py"
 PIPELINE = PKG / "streaming" / "pipeline.py"
+SESSION = PKG / "session.py"
 SOURCES = sorted(PKG.rglob("*.py"))
 
 
@@ -163,3 +166,26 @@ def test_bounded_runs_start_only_in_pipeline(trees):
     ]
     assert not hits, f"use streaming.pipeline.run_stream or its run_* entry points: {hits}"
     assert any(_starts_bounded_run(n) for n in ast.walk(trees[PIPELINE]))
+
+
+def _unsets_conf(node: ast.AST) -> bool:
+    """``<x>.conf.unset(...)``."""
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "unset"
+        and isinstance(node.func.value, ast.Attribute)
+        and node.func.value.attr == "conf"
+    )
+
+
+def test_conf_restored_only_in_session(trees):
+    hits = [
+        _where(p, n)
+        for p in SOURCES
+        if p != SESSION
+        for n in ast.walk(trees[p])
+        if _unsets_conf(n)
+    ]
+    assert not hits, f"use session.scoped_conf: {hits}"
+    assert any(_unsets_conf(n) for n in ast.walk(trees[SESSION]))

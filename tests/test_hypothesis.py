@@ -9,7 +9,7 @@ test, not the examples.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -377,3 +377,33 @@ def test_txlog_random_history_matches_model(spark, cmds, data):
             r["k"] for r in t.read(spark, version=v).select("k").collect()
         )
         assert got == expect, f"version {v}: {got} != model {expect}"
+
+
+def _bfs_hops(edges, src, hops):
+    """Pure-Python reference: fewest edges from ``src``, up to ``hops``."""
+    dist, frontier = {src: 0}, {src}
+    for hop in range(1, hops + 1):
+        frontier = {d for s, d in edges if s in frontier and d not in dist}
+        dist.update(dict.fromkeys(frontier, hop))
+    return dist
+
+
+node_ids = st.integers(min_value=0, max_value=8)
+
+
+@given(edges=st.lists(st.tuples(node_ids, node_ids), max_size=25))
+@example(edges=[(0, 1), (0, 1), (1, 0), (1, 2), (2, 1)])  # duplicates, cycles
+@example(edges=[(1, 2), (2, 0), (3, 4)])  # the source has no out-edges
+@example(edges=[(i, i + 1) for i in range(7)])  # nodes 6, 7 beyond the bound
+@settings(**SETTINGS)
+def test_min_plus_hops_matches_bfs(spark, edges):
+    """The folded min-plus rounds of #206 give exactly the bounded BFS
+    distances: one row per node reached within the hop bound, none
+    for nodes first reached later."""
+    from zmaxion_spark.queries.graph_q import _BFS_HOPS, _min_plus_hops
+
+    e = spark.createDataFrame(edges, "src bigint, dst bigint")
+    rows = _min_plus_hops(e, 0, _BFS_HOPS).collect()
+    got = {r.node: r.dist for r in rows}
+    assert len(got) == len(rows)
+    assert got == _bfs_hops(edges, 0, _BFS_HOPS)

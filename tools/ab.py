@@ -8,7 +8,11 @@ function to read os.environ["ZMX_AB"] (one of the states) at BUILD
 time (a temporary toggle inserted while the experiment runs; removed
 once a winner is kept). Each cycle times every state in turn with the
 noop sink in one session (``bench.run_one``), so JVM/codegen/footer
-warm-up cancels out. Prints per-cycle times and the min-of-N verdict.
+warm-up cancels out. Each state's run gets its own Spark job group, so
+every line prints the run's seconds next to the Spark jobs it cost
+(build-phase checkpoints and collects included), which tells a
+scheduling win from an execution win. Prints per-cycle times and the
+min-of-N verdict.
 """
 
 from __future__ import annotations
@@ -38,21 +42,30 @@ def main() -> None:
         sys.exit(2)
     q = REGISTRY[name]
     spark = get_spark("ab")
-    spark.sparkContext.setJobDescription(f"ab-warmup {name}")
+    sc = spark.sparkContext
+    sc.setJobGroup(f"ab-warmup {name}", f"ab-warmup {name}")
     os.environ["ZMX_AB"] = states[0]
     run_one(spark, q, SF_DIR)  # warm-up, untimed
     times: dict[str, list[float]] = {s: [] for s in states}
+    jobs: dict[str, list[int]] = {s: [] for s in states}
     for c in range(cycles):
         for s in states:
             os.environ["ZMX_AB"] = s
-            spark.sparkContext.setJobDescription(f"ab {s}#{c} {name}")
+            group = f"ab {s}#{c} {name}"
+            sc.setJobGroup(group, group)
             times[s].append(run_one(spark, q, SF_DIR))
+            jobs[s].append(len(sc.statusTracker().getJobIdsForGroup(group)))
         print(
-            f"cycle {c}: " + " ".join(f"{s} {times[s][-1]:.2f}s" for s in states),
+            f"cycle {c}: "
+            + " ".join(f"{s} {times[s][-1]:.2f}s/{jobs[s][-1]} jobs" for s in states),
             flush=True,
         )
     for s in states:
-        print(f"{s:>5}: min {min(times[s]):.2f}s  {[round(t, 2) for t in times[s]]}")
+        i = times[s].index(min(times[s]))
+        print(
+            f"{s:>5}: min {times[s][i]:.2f}s ({jobs[s][i]} jobs)  "
+            f"{[round(t, 2) for t in times[s]]}"
+        )
     best = min(states, key=lambda s: min(times[s]))
     print(f"{name}: {best.upper()} WINS")
 

@@ -4,9 +4,10 @@ Graphs derived from the warehouse itself: the co-purchase part graph
 (parts bought together in ≥2 orders — the "frequently bought
 together" graph) for triangle counting, and the nation-level trade
 graph (customer nation → supplier nation, lineitem-weighted) for a
-fixed-iteration PageRank.
+fixed-iteration PageRank, and the sparsified supplier co-supply graph
+(suppliers sharing a part) for bounded-hop BFS and label propagation.
 
-Both are oracle-paired EXACTLY — including PageRank, an iterative
+All are oracle-paired EXACTLY — including PageRank, an iterative
 algorithm: every per-edge contribution is an identical IEEE
 expression over identical operands on both engines, and every
 per-node reduction sums through DECIMAL(38,18), so the ranks stay
@@ -24,7 +25,16 @@ Scale themes at 100 TB:
 - PageRank's per-iteration shuffle is one groupBy(dst); at web
   scale, pre-partition edges by dst so every iteration reuses the
   same partitioning, and localCheckpoint every few iterations to
-  truncate lineage.
+  truncate lineage;
+- bounded-hop BFS (#206) is min-plus relaxation: each round keeps
+  MIN(d) per node, and min is associative, so the rounds need no
+  shuffle or checkpoint between them. All hops compile into one
+  whole-stage-codegen stage over one broadcast of the edge list,
+  which bounds the shape: ~57 B per edge in the broadcast hash
+  relation, so Spark's 8 GB broadcast cap is reached at ~150M edges;
+- label propagation (#211) is a majority vote per round, which is
+  not associative, so its rounds cannot be folded the same way and
+  keep one checkpoint each.
 """
 
 from __future__ import annotations
@@ -322,13 +332,10 @@ def _sparse_cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.s").alias("src"), F.col("b.s").alias("dst"))
         .distinct()
     )
-    return (
-        half.unionAll(
-            half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    # half is oriented src < dst, so it and its mirror are disjoint.
+    return half.unionAll(
+        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).localCheckpoint()
 
 
 
@@ -359,48 +366,68 @@ def _sparse_cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators=(104, 206),
     doc=f"Bounded-hop BFS shortest path (#206): the supplier co-supply "
     "graph (suppliers sharing a part, sparsified to near-neighbor ids "
-    "so the graph has real diameter) is explored breadth-first from "
-    f"supplier {_BFS_SRC} for {_BFS_HOPS} hops; first visit = minimum "
-    "distance, already-settled nodes leave the frontier via an "
-    "anti-join. The distributed-BFS shape that scales: per hop ONE "
-    "equi-join of the (small) frontier against the edge list plus one "
-    "dedup — frontier-bounded work, no all-pairs state, and the hop "
-    "bound caps total cost on 100 TB edge lists (unreachable-in-k "
-    "nodes are simply absent, identical in both engines). Oracle: "
-    "DuckDB recursive CTE with UNION dedup, MIN(d) per node.",
+    "so the graph has real diameter) is searched from supplier "
+    f"{_BFS_SRC} for {_BFS_HOPS} hops as bounded min-plus relaxation: "
+    "each round left-joins the distance table to the broadcast edge "
+    "list, emits every node's own distance plus d+1 for each neighbor, "
+    "and keeps MIN(d) per node. min is associative, so the rounds fold "
+    "into ONE whole-stage-codegen stage over one broadcast of the "
+    "edge list that every hop reuses: no per-hop shuffle, checkpoint "
+    "or job, and nodes unreachable in k hops are simply absent "
+    "(identical in both engines). Scale bound: the edge list (at most "
+    "6 edges per supplier) is broadcast once, at ~57 B per edge in the "
+    "hash relation, so it stops fitting Spark's 8 GB broadcast cap at "
+    "~150M edges (~25M suppliers, about SF 2,500), and every executor "
+    "holds a copy; past that the rounds need a shuffle join per hop. "
+    "Oracle: DuckDB recursive CTE with UNION dedup, MIN(d) per node.",
 )
 def q_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _sparse_cosupply_edges(spark, sf_dir)
-    dist = e.sparkSession.range(1).select(
-        F.lit(_BFS_SRC).cast("long").alias("node"),
-        F.lit(0).cast("long").alias("dist"),
+    return _min_plus_hops(
+        _sparse_cosupply_edges(spark, sf_dir), _BFS_SRC, _BFS_HOPS
     )
-    frontier = dist
-    for hop in range(1, _BFS_HOPS + 1):
-        # The frontier is bounded by construction at EVERY scale: edges
-        # only connect supplier ids within ±3, so a BFS from node 0
-        # reaches ids ≤ 3·hop — ≤16 rows total. coalesce(1) collapses
-        # the 32 near-empty post-shuffle partitions each hop was
-        # scheduling (~0.4 s/hop of empty-task overhead), and ONE
-        # checkpoint per hop replaces the previous two (nxt was
-        # materialized once inside dist's checkpoint and again as
-        # frontier's); dist is a union of already-materialized RDDs, so
-        # its own checkpoint bought nothing (guide §2.6 stragglers /
-        # §5 lineage).
-        nxt = (
-            frontier.join(e, frontier.node == e.src)
+
+
+def _min_plus_hops(e: DataFrame, src: int, hops: int) -> DataFrame:
+    """``(node, dist)`` for every node within ``hops`` edges of ``src``
+    over the edge list ``e(src, dst)``, dist = fewest edges.
+
+    Each round reads the previous one once, so the plan grows linearly.
+    The seed row sits on one partition, which every later operator
+    keeps (the broadcast join and explode, and an aggregate that needs
+    no exchange on one partition), so all rounds compile into one
+    stage; the broadcast exchange is built once and reused by the
+    other rounds. The reached set is processed by one task, which
+    suits a hop bound that reaches a small part of the graph."""
+    edges = F.broadcast(
+        e.select(F.col("src").cast("long"), F.col("dst").cast("long"))
+    )
+    # The seed node is the range's id column, not a literal: a literal
+    # key lets the optimizer fold the first join into a nested-loop
+    # join over its own, filtered broadcast of the edges.
+    dist = e.sparkSession.range(src, src + 1, numPartitions=1).select(
+        F.col("id").alias("node"), F.lit(0).cast("long").alias("d")
+    )
+    for _ in range(hops):
+        # A node without out-edges keeps its own row through the left
+        # join; its (NULL, d + 1) candidate is dropped below.
+        dist = (
+            dist.join(edges, dist.node == edges.src, "left")
             .select(
-                F.col("dst").cast("long").alias("node"),
-                F.lit(hop).cast("long").alias("dist"),
+                F.explode(
+                    F.array(
+                        F.struct("node", "d"),
+                        F.struct(
+                            F.col("dst").alias("node"), (F.col("d") + 1).alias("d")
+                        ),
+                    )
+                ).alias("c")
             )
-            .distinct()
-            .join(dist.select("node"), "node", "left_anti")
-            .coalesce(1)
-            .localCheckpoint(eager=True)
+            .select("c.node", "c.d")
+            .filter(F.col("node").isNotNull())
+            .groupBy("node")
+            .agg(F.min("d").alias("d"))
         )
-        dist = dist.unionAll(nxt)
-        frontier = nxt
-    return dist
+    return dist.select("node", F.col("d").alias("dist"))
 
 
 # ---------------------------------------------------------------------------
@@ -480,6 +507,14 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     wpick = Window.partitionBy("node").orderBy(F.col("c").desc(), "label")
+    # Unlike #206's min, a majority vote is not associative: a round
+    # needs the complete label counts of the round before, so the rounds
+    # cannot fold into one stage. Measured and rejected on sf0.01
+    # (tools/ab.py, min of 5-8, 4 cores): dropping the per-round
+    # checkpoint (25 -> 19 jobs, but 1.39 -> 1.99 s as the plan
+    # re-derives every earlier round); edges repartitioned by dst
+    # (1.56 s, no gain); deriving the edges with one collect_set
+    # shuffle per part (1.51 vs 1.43 s over 8 cycles, no gain).
     for t in range(1, _LP_ROUNDS + 1):
         counts = (
             e.join(lab.select(F.col("node").alias("src"), "label"), "src")

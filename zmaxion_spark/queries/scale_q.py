@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from zmaxion_spark.catalog import cache_built, fixture_cache_dir, load_table
 from zmaxion_spark.queries.helpers import DEC, sql_dsum
 from zmaxion_spark.queries.registry import query
+from zmaxion_spark.session import scoped_conf
 
 
 # ---------------------------------------------------------------------------
@@ -372,10 +373,7 @@ _BLOOM_CONFS = {
     bench=True,
 )
 def q_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    saved = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, _BLOOM_CONFS):
         li = load_table(spark, sf_dir, "lineitem")
         o = load_table(spark, sf_dir, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -392,14 +390,8 @@ def q_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Materialize while the runtime-filter confs are active — the
         # injection happens at optimization time, so a lazily returned
-        # plan would re-optimize AFTER the restore below.
+        # plan would re-optimize AFTER scoped_conf restores them.
         return out.localCheckpoint(eager=True)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 # ---------------------------------------------------------------------------

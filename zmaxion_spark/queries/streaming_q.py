@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from zmaxion_spark.catalog import load_table
 from zmaxion_spark.queries.helpers import DEC
 from zmaxion_spark.queries.registry import query
+from zmaxion_spark.session import scoped_conf
 from zmaxion_spark.streaming.pipeline import Pipeline, run_available_now
 from zmaxion_spark.streaming.sources import stream_events
 
@@ -307,25 +308,14 @@ def q_stream_stateful_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from zmaxion_spark.streaming.stateful import running_counters_v2
 
     ev = stream_events(spark, sf_dir).select("user_id", "value")
-    key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(key, None)
-    spark.conf.set(key, _ROCKSDB_PROVIDER)
-    try:
-        with scoped_worker_protobuf(spark) as shim:
-            if not shim.enabled:
-                raise RuntimeError(
-                    "transformWithState needs a google.protobuf runtime "
-                    "(pip install protobuf>=6.33, or the sandbox fallback "
-                    "in zmaxion_spark/_protoshim)"
-                )
-            t = run_available_now(
-                running_counters_v2(ev), "counters_v2", mode="update"
+    with scoped_conf(spark, _ROCKSDB_STATE), scoped_worker_protobuf(spark) as shim:
+        if not shim.enabled:
+            raise RuntimeError(
+                "transformWithState needs a google.protobuf runtime "
+                "(pip install protobuf>=6.33, or the sandbox fallback "
+                "in zmaxion_spark/_protoshim)"
             )
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
+        t = run_available_now(running_counters_v2(ev), "counters_v2", mode="update")
     return t.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.max("max_value").alias("max_value"),
@@ -671,9 +661,11 @@ def q_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # #166 RocksDB state store backend
 # ---------------------------------------------------------------------------
 
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
+_ROCKSDB_STATE = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )
+}
 
 
 @query(
@@ -703,10 +695,7 @@ _ROCKSDB_PROVIDER = (
     bench=False,  # same topology as q_stream_tumbling; backend demo
 )
 def q_stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(key, None)
-    spark.conf.set(key, _ROCKSDB_PROVIDER)
-    try:
+    with scoped_conf(spark, _ROCKSDB_STATE):
         t = (
             Pipeline.from_events(spark, sf_dir)
             .watermark("ts", "10 minutes")
@@ -717,11 +706,6 @@ def q_stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .to_memory("rocksdb_state", mode="complete")
         )
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
     return t.select(
         F.unix_timestamp(F.col("window.start")).alias("w_start_sec"),
         "user_bucket",

@@ -26,6 +26,7 @@ from pyspark.sql.window import Window
 from zmaxion_spark.catalog import load_table
 from zmaxion_spark.queries.helpers import DEC, davg, dsum, sql_davg, sql_dsum
 from zmaxion_spark.queries.registry import query
+from zmaxion_spark.session import scoped_conf
 
 
 # ---------------------------------------------------------------------------
@@ -280,6 +281,30 @@ def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _recursion_confs(n_nodes: int) -> dict[str, str]:
+    """The confs both Spark-side ``WITH RECURSIVE`` walks here (#104,
+    #309) run under, set through ``session.scoped_conf`` around their
+    own materialization so they never leak into other recursive CTEs on
+    a shared session.
+
+    - ``cteRecursionRowLimit``: a walk visits each of ``n_nodes`` parts
+      once, but Spark's runaway valve defaults to 1M rows and killed the
+      (correct, terminating) walk past ~1M parts at the sf10 smoke. It
+      is sized from the domain rather than disabled, so termination
+      keeps a real bound.
+    - ``cteRecursionAnchorRowsLimitToConvertToLocalRelation``: Spark
+      4.1's ``UnionLoopExec`` collects every level of at most 100 rows
+      to the driver and plans the next level over that
+      ``LocalRelation``: one more job per level on top of the level's
+      own count job. At 0 a level stays the materialized DataFrame it
+      already is (54 -> 42 jobs for #104, 89 -> 65 for #309 at
+      sf0.01)."""
+    return {
+        "spark.sql.cteRecursionRowLimit": str(max(1_000_000, 2 * n_nodes)),
+        "spark.sql.cteRecursionAnchorRowsLimitToConvertToLocalRelation": "0",
+    }
+
+
 @query(
     "q_recursive_bom",
     oracle="""
@@ -306,19 +331,19 @@ def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     "2k, 2k+1 — a deterministic binary assembly tree), rolled up to "
     "nodes-per-depth. Exercises the engine's iterative fixpoint "
     "execution: each step is one equi-join of the frontier against "
-    "the edge table, O(log n) rounds. Scale: the frontier, not the "
-    "corpus, is the iterated state; the edge side stays a parquet "
-    "scan joined per round (broadcast the frontier when small).",
+    "the edge table, O(log n) rounds. The edge list is derived once "
+    "and materialized outside the recursion; every level is one Spark "
+    "job (its row count), with no driver collect between levels "
+    "(the small-level LocalRelation conversion is turned off while "
+    "the walk runs, and the row valve is sized from |part|; both "
+    "confs are restored after). Scale: the frontier, not the corpus, "
+    "is the iterated state, so the job count grows with the depth, "
+    "log2|part|, not with the data.",
 )
 def q_recursive_bom(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
-    # The walk visits every partkey once, so total recursion output is
-    # bounded by |part| — but Spark's cteRecursionRowLimit safety valve
-    # defaults to 1M rows and kills the (correct, terminating) query on
-    # fixtures past ~1M parts (hit at the sf10 smoke). Size the limit
-    # from the actual domain instead of disabling it: termination stays
-    # protected by a real bound, one cheap dimension count pays for it
-    # (and the same pass fetches MAX(p_partkey) for the edge bound).
+    # One cheap dimension pass sizes the recursion row valve and
+    # fetches MAX(p_partkey) for the edge bound.
     n, mk = part.agg(
         F.count(F.lit(1)), F.max("p_partkey")
     ).first()
@@ -345,33 +370,25 @@ def q_recursive_bom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     view = f"bom_edges_{uuid.uuid4().hex[:12]}"
     edges.createOrReplaceTempView(view)
-    # Scope the raised valve to THIS query: the limit is read at
-    # execution time, so materialize the (tiny, depth-rows) result
-    # under the raised conf and restore the previous value after —
-    # otherwise the 2x|part| limit leaks into every later recursive
-    # CTE on the shared session and weakens their runaway protection.
-    prev = spark.conf.get("spark.sql.cteRecursionRowLimit", None)
-    spark.conf.set("spark.sql.cteRecursionRowLimit", str(max(1_000_000, 2 * n)))
+    # The recursion confs are read at execution time, so the (tiny,
+    # depth-rows) result is materialized inside their scope.
     try:
-        return spark.sql(
-        f"""
-        WITH RECURSIVE walk(p_partkey, depth) AS (
-            SELECT CAST(1 AS BIGINT), CAST(0 AS BIGINT)
-            UNION ALL
-            SELECT c.child, w.depth + 1
-            FROM walk w
-            JOIN {view} c ON c.parent = w.p_partkey
-        )
-        SELECT depth, COUNT(*) AS n_nodes,
-               MIN(p_partkey) AS min_key, MAX(p_partkey) AS max_key
-        FROM walk GROUP BY depth
-        """
-        ).localCheckpoint(eager=True)
+        with scoped_conf(spark, _recursion_confs(n)):
+            return spark.sql(
+                f"""
+            WITH RECURSIVE walk(p_partkey, depth) AS (
+                SELECT CAST(1 AS BIGINT), CAST(0 AS BIGINT)
+                UNION ALL
+                SELECT c.child, w.depth + 1
+                FROM walk w
+                JOIN {view} c ON c.parent = w.p_partkey
+            )
+            SELECT depth, COUNT(*) AS n_nodes,
+                   MIN(p_partkey) AS min_key, MAX(p_partkey) AS max_key
+            FROM walk GROUP BY depth
+            """
+            ).localCheckpoint(eager=True)
     finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.cteRecursionRowLimit")
-        else:
-            spark.conf.set("spark.sql.cteRecursionRowLimit", prev)
         spark.catalog.dropTempView(view)
 
 
@@ -686,9 +703,10 @@ _CP_DUR = (
     "which plain reachability (#104) cannot answer. Durations and "
     "sums stay BIGINT; argmax ties break on node id via the "
     "window-max filter. Scale: the frontier is the iterated state "
-    "(O(log n) rounds); the recursion row valve is sized from the "
-    "part-domain count and restored after (the #104 conf-leak "
-    "discipline).",
+    "(O(log n) rounds, one count job each and no driver collect "
+    "between them); the recursion confs of #104 (row valve sized from "
+    "the part-domain count, no small-level LocalRelation conversion) "
+    "are set around the materialization and restored after.",
     bench=False,
 )
 def q_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -696,21 +714,17 @@ def q_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir, ["part"])
     n = spark.table("part").count()
-    prev = spark.conf.get("spark.sql.cteRecursionRowLimit", None)
-    spark.conf.set(
-        "spark.sql.cteRecursionRowLimit", str(max(1_000_000, 2 * n))
+    dur_root = (
+        "CAST(CONV(SUBSTRING(MD5(CAST(CONCAT('dur:', "
+        "CAST(CAST(1 AS BIGINT) AS STRING)) AS BINARY)), 1, 8), 16, 10) "
+        "AS BIGINT) % 100 + 1"
     )
-    try:
-        dur_root = (
-            "CAST(CONV(SUBSTRING(MD5(CAST(CONCAT('dur:', "
-            "CAST(CAST(1 AS BIGINT) AS STRING)) AS BINARY)), 1, 8), 16, 10) "
-            "AS BIGINT) % 100 + 1"
-        )
-        dur_child = (
-            "CAST(CONV(SUBSTRING(MD5(CAST(CONCAT('dur:', "
-            "CAST(c.child AS STRING)) AS BINARY)), 1, 8), 16, 10) "
-            "AS BIGINT) % 100 + 1"
-        )
+    dur_child = (
+        "CAST(CONV(SUBSTRING(MD5(CAST(CONCAT('dur:', "
+        "CAST(c.child AS STRING)) AS BINARY)), 1, 8), 16, 10) "
+        "AS BIGINT) % 100 + 1"
+    )
+    with scoped_conf(spark, _recursion_confs(n)):
         return spark.sql(
             f"""
         WITH RECURSIVE walk(p_partkey, depth, cum) AS (
@@ -734,8 +748,3 @@ def q_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY depth
         """
         ).localCheckpoint(eager=True)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.cteRecursionRowLimit")
-        else:
-            spark.conf.set("spark.sql.cteRecursionRowLimit", prev)

@@ -14,7 +14,9 @@ query callable works regardless of who built the session.
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -51,6 +53,24 @@ def tune(spark: SparkSession) -> SparkSession:
             pass  # non-settable on this build; keep going
     _TUNED_SESSIONS.add(key)
     return spark
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the ``with`` body only. On exit,
+    also when the body raises, each key gets its previous value back,
+    or is unset again if it had none."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _default_driver_mem() -> str:
